@@ -23,13 +23,15 @@ module makes the index physically real:
   candidates against the persisted shingles.
 - :func:`append_to_minhash_index` — incremental maintenance: fold today's
   batch into the stored index (bands appended INTO the bucket layout,
-  shingles/sizes appended) — the near-dup twin of
-  dedup.merge_hash_links_onto_index. CRASH-ATOMIC (r9): staged hidden,
-  committed by one marker-file creation, published by idempotent renames,
-  retried exactly-once via a doc_id conflict-ignoring upsert; probes roll
-  committed batches forward, writers also discard orphaned staging
-  (:func:`recover_minhash_index`) — fault-injection tested at every
-  boundary.
+  shingles/sizes/stats appended) — the near-dup twin of
+  dedup.merge_hash_links_onto_index. Every staged component derives from
+  ONE pinned sketch of the batch and lands in at most two writes (one
+  partitioned segment write, one bucketed band write). CRASH-ATOMIC:
+  staged hidden, committed by one marker-file creation, published by
+  idempotent renames, retried exactly-once via a doc_id conflict-ignoring
+  upsert; probes roll committed batches forward, writers also discard
+  orphaned staging (:func:`recover_minhash_index`) — fault-injection
+  tested at every boundary.
 
 Consistency contract (why the hot set is FROZEN between rebuilds): every
 stored signature was computed over shingles capped by the hot set as of the
@@ -90,11 +92,19 @@ Round-11 production posture:
   skipped are quarantined through an uncapped slow-path verify in
   :func:`probe_and_ingest` — a >cap near-dup clique can never be
   ingested as novel.
+- The index CARRIES its own stats: ``_carried_stats.json`` holds the max
+  band-occupancy bound and the staleness verdict's inputs, keyed by the
+  index state token. Each append advances them from the batch's own
+  stats (observed during its staging job) instead of re-reading the
+  components, so per-ingest cost scales with the delta; any other state
+  change (forget, compact, rebuild, a crash before the carry was written)
+  leaves the token stale and readers recompute from the components.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import tempfile
 import threading
@@ -103,7 +113,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -316,8 +326,6 @@ class _WriterLease:
         os.utime(self.path)
 
     def owned(self) -> bool:
-        import json
-
         try:
             with open(self.path, encoding="utf-8") as fh:
                 return json.load(fh).get("token") == self.token
@@ -345,8 +353,6 @@ def writer_lease(
     """Acquire the index's single-writer maintenance lease (see the protocol
     comment above). Module-level LEASE_*_SECONDS are read at call time so
     tests (and operators with different SLAs) can tune them."""
-    import json
-
     wait = LEASE_WAIT_SECONDS if wait_seconds is None else wait_seconds
     stale = LEASE_STALE_SECONDS if stale_seconds is None else stale_seconds
     path = os.path.join(idx.index_dir, _LEASE_FILE)
@@ -449,6 +455,9 @@ def build_minhash_index(
 
     Two passes over the corpus scan (hot aggregate, then capped sketch) —
     the honest cost of a build job; probes and appends never re-pay it.
+    The staleness verdict's inputs are observed during the hot, sizes and
+    df_stats writes and carried with the index (see the module docstring),
+    so the first ingest starts from carried stats at no extra build job.
     ``hot`` override: appends keep the frozen cap, so the
     rebuild-equivalence test (and any staged rebuild that must preserve an
     existing cap) can inject it; production builds leave it None.
@@ -474,8 +483,14 @@ def build_minhash_index(
             .agg(F.count("*").alias("df"))
             .filter(F.col("df") * 2 > F.lit(n_docs))
         )
+    # the staleness verdict's inputs are observed while the components they
+    # derive from are written (no extra job) and carried with the index
+    seen_hot, seen_sizes, seen_df = Observation(), Observation(), Observation()
     overwrite_parquet(
-        hot.select("sh", F.col("df").cast("long").alias("df")), idx.hot_path
+        hot.select("sh", F.col("df").cast("long").alias("df")).observe(
+            seen_hot, F.collect_list(F.struct("sh", "df")).alias("rows")
+        ),
+        idx.hot_path,
     )
     # everything downstream caps against the PERSISTED hot set, exactly the
     # relation probes will read — no lineage divergence possible
@@ -483,14 +498,32 @@ def build_minhash_index(
     overwrite_parquet(capped.select("doc_id", "sh"), idx.shingles_path)
     stored = idx.shingles(spark)
     overwrite_parquet(
-        stored.groupBy("doc_id").agg(F.count("*").alias("n")), idx.sizes_path
+        stored.groupBy("doc_id")
+        .agg(F.count("*").alias("n"))
+        .observe(
+            seen_sizes,
+            F.count(F.lit(1)).alias("n"),
+            F.max("doc_id").alias("max_doc_id"),
+        ),
+        idx.sizes_path,
     )
+    n_stored = seen_sizes.get["n"]
     # exact per-shingle df of the stored (non-hot) shingles — the
     # vocabulary-sized stats component the nightly staleness verdict sums
     # instead of re-scanning the occurrence-sized shingles/ relation; each
     # append stages its delta-sized contribution (see MinHashIndex.df_stats)
     overwrite_parquet(
-        stored.groupBy("sh").agg(F.count("*").cast("long").alias("df")),
+        stored.groupBy("sh")
+        .agg(F.count("*").cast("long").alias("df"))
+        .observe(
+            seen_df,
+            F.collect_list(
+                F.when(F.col("df") * 2 > F.lit(n_stored), F.struct("sh", "df"))
+            ).alias("rows"),
+            F.max(F.when(F.col("df") * 2 <= F.lit(n_stored), F.col("df"))).alias(
+                "max_cold"
+            ),
+        ),
         idx.df_stats_path,
     )
     save_bucketed_table(
@@ -499,6 +532,18 @@ def build_minhash_index(
         BAND_KEY,
         n_buckets=n_buckets,
         path=bands_path or os.path.join(index_dir, "bands"),
+    )
+    _write_carry(
+        idx,
+        _carry_token(idx),
+        verdict={
+            "n_docs": n_stored,
+            "hot_df": {r["sh"]: r["df"] for r in seen_hot.get["rows"]},
+            "newly_hot_df": {r["sh"]: r["df"] for r in seen_df.get["rows"]},
+            "max_cold_df": seen_df.get["max_cold"] or 0,
+            "n_skips": 0,
+        },
+        max_doc_id=seen_sizes.get["max_doc_id"],
     )
     return idx
 
@@ -517,6 +562,60 @@ def delta_band_shingles(
         broadcast(idx.hot(spark).select("sh")), "sh", "left_anti"
     )
     return shd, minhash_bands(shd)
+
+
+@dataclass(frozen=True)
+class _DeltaSketch:
+    """A batch's sketch under the index's frozen hot set, pinned once so
+    the probe, the append's staging and the slow path all read the same
+    rows instead of re-shingling the text.
+
+    ``shingles``: (doc_id, sh, hot) — every distinct shingle of every doc,
+    flagged when it is in the frozen hot set (the capped-out side the
+    hot_delta stats need). ``bands``: (doc_id, band, x, y) over the capped
+    (non-hot) shingles. ``min_doc_id``: a lower bound of the sketched
+    doc_ids (None: no doc has a shingle)."""
+
+    shingles: DataFrame
+    bands: DataFrame
+    min_doc_id: int | None
+
+    @property
+    def capped(self) -> DataFrame:
+        return self.shingles.filter(~F.col("hot")).select("doc_id", "sh")
+
+    def only(self, ids: DataFrame, how: str = "left_semi") -> _DeltaSketch:
+        """The sketch restricted to (``how="left_anti"``: without) the docs
+        in ``ids`` (a delta-sized doc_id relation, broadcast)."""
+        ids = broadcast(ids.select("doc_id"))
+        return _DeltaSketch(
+            self.shingles.join(ids, "doc_id", how),
+            self.bands.join(ids, "doc_id", how),
+            self.min_doc_id,
+        )
+
+
+def _sketch_delta(
+    spark: SparkSession, idx: MinHashIndex, delta_docs: DataFrame
+) -> _DeltaSketch:
+    from sabd_deduplicator_spark.operators.similarity import (
+        minhash_bands,
+        shingles_of,
+    )
+
+    hot = idx.hot(spark).select("sh", F.lit(True).alias("hot"))
+    first = Observation()
+    flagged = (
+        shingles_of(delta_docs)
+        .join(broadcast(hot), "sh", "left")
+        .select("doc_id", "sh", F.coalesce("hot", F.lit(False)).alias("hot"))
+        .observe(first, F.min("doc_id").alias("id"))
+        .localCheckpoint()
+    )
+    bands = minhash_bands(
+        flagged.filter(~F.col("hot")).select("doc_id", "sh")
+    ).localCheckpoint()
+    return _DeltaSketch(flagged, bands, first.get["id"])
 
 
 # band-key occupancy above which a probe skips the key — the SAME constant
@@ -572,22 +671,94 @@ def _max_band_occupancy(spark: SparkSession, idx: MinHashIndex) -> int:
     instead of a census scan per probe — an always-on census cost the
     registered probe a measured ~2× wall at sf0.1 for zero skips, and
     even resolving the band location per probe is a DESCRIBE TABLE job
-    this path must not pay."""
-    from sabd_deduplicator_spark.catalog import evict_dead_app_entries
+    this path must not pay.
 
+    Behind the in-process memo sits the index's carried state: an EXACT
+    bound carried under the current state token is reused by any process;
+    otherwise one job recomputes it (the bucketed scan aggregates per key
+    without an exchange, the top-1 merges on the driver) and carries it."""
     token = _index_state_token(idx, ("bands*", "sizes"))
     key = (spark.sparkContext.applicationId, idx.table_name, token)
     if key not in _OCC_MEMO:
         evict_dead_app_entries(_OCC_MEMO, key[0])
-        row = (
-            idx.bands(spark)
-            .groupBy(*BAND_KEY)
-            .agg(F.count("*").alias("c"))
-            .agg(F.max("c").alias("m"))
-            .first()
-        )
-        _OCC_MEMO[key] = int(row["m"] or 0)
+        carry_token = _carry_token(idx)
+        occ = _read_carry(idx, carry_token).get("occupancy")
+        if occ is None or not occ["exact"]:
+            top = (
+                idx.bands(spark)
+                .groupBy(*BAND_KEY)
+                .agg(F.count("*").alias("c"))
+                .orderBy(F.desc("c"))
+                .limit(1)
+                .collect()
+            )
+            occ = {"bound": int(top[0]["c"]) if top else 0, "exact": True}
+            _write_carry(idx, carry_token, occupancy=occ)
+        _OCC_MEMO[key] = occ["bound"]
     return _OCC_MEMO[key]
+
+
+def _occupancy_bound(spark: SparkSession, idx: MinHashIndex, cap: int) -> int:
+    """An upper bound of the max band-key occupancy, as cheap as it can be
+    while still deciding ``bound > cap``: the carried bound (exact or the
+    appends' running upper bound) when it fits under the cap, else the
+    exact max (:func:`_max_band_occupancy`) — so a loose bound that has
+    drifted over the cap is re-tightened once instead of sending every
+    later probe through the census."""
+    occ = _read_carry(idx, _carry_token(idx)).get("occupancy")
+    if occ is not None and occ["bound"] <= cap:
+        return occ["bound"]
+    return _max_band_occupancy(spark, idx)
+
+
+# --- carried index stats -----------------------------------------------------
+#
+# One small JSON file in the index directory: {"token": <state token over
+# every component below>, "occupancy": {"bound", "exact"}, "verdict": the
+# staleness verdict's inputs}. Each part is valid only while the token still
+# matches the on-disk state, so a fresh process gets the same saving and any
+# state change this module did not carry forward (forget, compact, rebuild,
+# a crash between publish and carry) falls back to recomputing from the
+# components. Written atomically (temp + rename) and best-effort: a read-only
+# index mount just recomputes.
+
+_CARRY_FILE = "_carried_stats.json"
+_CARRY_TMP = ".carry_tmp_"
+_CARRY_COMPONENTS = (
+    "bands*", "sizes", "df_stats", "hot", "hot_delta", "tombstones",
+    "probe_stats",
+)
+
+
+def _carry_token(idx: MinHashIndex) -> str:
+    return _index_state_token(idx, _CARRY_COMPONENTS)
+
+
+def _read_carry(idx: MinHashIndex, token: str) -> dict:
+    try:
+        with open(os.path.join(idx.index_dir, _CARRY_FILE), encoding="utf-8") as fh:
+            carry = json.load(fh)
+    except (OSError, ValueError):
+        return {}
+    return carry if carry.get("token") == token else {}
+
+
+def _write_carry(idx: MinHashIndex, token: str, **parts) -> None:
+    """Merge ``parts`` into the carried state of ``token`` (replacing
+    whatever an older state carried), unless the index moved on meanwhile."""
+    if _carry_token(idx) != token:
+        return
+    carry = {**_read_carry(idx, token), **parts, "token": token}
+    tmp = os.path.join(idx.index_dir, _CARRY_TMP + uuid.uuid4().hex[:8])
+    try:
+        with open(tmp, "w", encoding="utf-8") as fh:
+            json.dump(carry, fh)
+        os.replace(tmp, os.path.join(idx.index_dir, _CARRY_FILE))
+    except OSError:
+        try:
+            os.remove(tmp)
+        except OSError:
+            pass
 
 
 def probe_minhash_index(
@@ -596,6 +767,7 @@ def probe_minhash_index(
     delta_docs: DataFrame,
     bucket_cap: int | None = PROBE_BUCKET_CAP,
     stats: dict | None = None,
+    _sketch: _DeltaSketch | None = None,
 ) -> DataFrame:
     """Near-dup pairs (delta_doc, corpus_doc, jaccard ≥ 0.5) of a delta
     batch against the STORED index. Work is O(delta sketch) + one bucketed
@@ -628,7 +800,10 @@ def probe_minhash_index(
     anti-joined against the (broadcast, delta-sized) tombstone set -- a
     BroadcastHashJoin on the streamed index side, so the bucketed scan
     stays exchange-free; with no tombstones the plan is byte-identical to
-    the pre-deletion one (filesystem check, no Spark job)."""
+    the pre-deletion one (filesystem check, no Spark job).
+
+    ``_sketch`` (private): the pinned sketch of ``delta_docs``, computed
+    once by :func:`probe_and_ingest` and shared with its append."""
     # roll forward any committed-but-unpublished append first (cheap glob;
     # roll_back stays False — an uncommitted staging may be a concurrent
     # append in flight and is invisible to this read anyway). Roll-forward
@@ -658,8 +833,14 @@ def probe_minhash_index(
         bands_e = bands_e.join(tomb, "doc_id", "left_anti")
         she = she.join(tomb, "doc_id", "left_anti")
         sizes_e = sizes_e.join(tomb, "doc_id", "left_anti")
-    shd, bands_d = delta_band_shingles(spark, idx, delta_docs)
-    if bucket_cap is not None and _max_band_occupancy(spark, idx) > bucket_cap:
+    if _sketch is None:
+        shd, bands_d = delta_band_shingles(spark, idx, delta_docs)
+    else:
+        shd, bands_d = _sketch.capped, _sketch.bands
+    if (
+        bucket_cap is not None
+        and _occupancy_bound(spark, idx, bucket_cap) > bucket_cap
+    ):
         # some bucket somewhere is over the cap, so this delta MIGHT hit
         # one: run the delta-keyed census. It stays LAZY — a broadcast-
         # exchange subtree inside the candidate job (one extra 3-column
@@ -678,10 +859,15 @@ def probe_minhash_index(
         if stats is not None:
             # reporting is the operational path (probe_and_ingest): pin the
             # (delta-keyed, small) census — it feeds the skip report AND
-            # the at-risk quarantine below
-            census = census.localCheckpoint()
+            # the at-risk quarantine below; the skip count is observed
+            # while pinning, no separate count job
+            seen = Observation()
+            census = census.observe(
+                seen,
+                F.count(F.when(F.col("occupancy") > bucket_cap, 1)).alias("n"),
+            ).localCheckpoint()
             oversized = census.filter(F.col("occupancy") > bucket_cap)
-            stats["n_oversized_buckets"] = oversized.count()
+            stats["n_oversized_buckets"] = seen.get["n"]
             stats["bucket_cap"] = bucket_cap
             # quarantine feed (judge r10 advice): a delta doc whose EVERY
             # index-shared band key is over the cap loses all its possible
@@ -705,14 +891,17 @@ def probe_minhash_index(
                     ).alias("n_over"),
                 )
             )
+            risk = Observation()
             stats["at_risk_docs"] = (
                 per_doc.filter(
                     (F.col("n_over") > 0)
                     & (F.col("n_shared") == F.col("n_over"))
                 )
                 .select("doc_id")
+                .observe(risk, F.count(F.lit(1)).alias("n"))
                 .localCheckpoint()
             )
+            stats["n_at_risk_docs"] = risk.get["n"]
         else:
             oversized = census.filter(F.col("occupancy") > bucket_cap)
         # dropping the key on the DELTA side is enough: the equi-join
@@ -722,14 +911,15 @@ def probe_minhash_index(
             broadcast(oversized.select(*BAND_KEY)), BAND_KEY, "left_anti"
         )
     elif bucket_cap is not None and stats is not None:
-        # the memoized index-state bound proves no bucket can exceed the
-        # cap — the census is skipped and there is nothing to skip
+        # the carried/memoized index-state bound proves no bucket can
+        # exceed the cap — the census is skipped and there is nothing to skip
         stats["n_oversized_buckets"] = 0
         stats["bucket_cap"] = bucket_cap
     # materialized (localCheckpoint, eager): the candidate set is
     # delta-sized and feeds TWO consumers — the intersection join and the
     # broadcast restriction below — and without pinning, each would re-run
-    # the band join
+    # the band join; its row count is observed while pinning
+    n_cand = Observation()
     cand = (
         bands_d.select(F.col("doc_id").alias("delta_doc"), *BAND_KEY)
         .join(
@@ -738,6 +928,7 @@ def probe_minhash_index(
         )
         .select("delta_doc", "corpus_doc")
         .distinct()
+        .observe(n_cand, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
     # THE index-growth guard (r9 curve, PERF.md): the verify stage must
@@ -751,29 +942,36 @@ def probe_minhash_index(
     # Broadcast GUARD (judge r9 advice): the "delta-sized candidates"
     # assumption rests on the hot-set cap, and a skewed corpus whose band
     # buckets crowd (the staleness scenario) can push the candidate set
-    # toward corpus size — broadcasting that would OOM the driver. cand is
-    # checkpointed, so the row count (an upper bound on distinct corpus
-    # docs) is one cheap job; above the threshold, fall back to a shuffled
-    # left_semi — slower, never fatal.
-    corpus_hits = cand.select(F.col("corpus_doc").alias("doc_id")).distinct()
-    if cand.count() <= PROBE_BROADCAST_MAX_CANDIDATES:
+    # toward corpus size — broadcasting that would OOM the driver. The
+    # pinned row count (an upper bound on distinct corpus docs) decides;
+    # above the threshold, fall back to a shuffled left_semi — slower,
+    # never fatal. Broadcast, the set needs no distinct (a semi-join's
+    # build side may hold duplicates), so it costs no shuffle either.
+    corpus_hits = cand.select(F.col("corpus_doc").alias("doc_id"))
+    if n_cand.get["n"] <= PROBE_BROADCAST_MAX_CANDIDATES:
         corpus_hits = broadcast(corpus_hits)
+    else:
+        corpus_hits = corpus_hits.distinct()
     she = she.join(corpus_hits, "doc_id", "left_semi")
     sizes_e = sizes_e.join(corpus_hits, "doc_id", "left_semi")
-    szd = shd.groupBy("doc_id").agg(F.count("*").alias("nd"))
+    # LEFT join: per candidate pair, every delta shingle is one row (nd)
+    # and the ones the corpus doc shares carry a match (i) — the delta
+    # doc's size comes out of the same aggregate, no separate size join
     inter = (
         cand.join(shd.select(F.col("doc_id").alias("delta_doc"), "sh"), "delta_doc")
         .join(
-            she.select(F.col("doc_id").alias("corpus_doc"), "sh"),
+            she.select(
+                F.col("doc_id").alias("corpus_doc"), "sh", F.lit(1).alias("hit")
+            ),
             ["corpus_doc", "sh"],
+            "left",
         )
         .groupBy("delta_doc", "corpus_doc")
-        .agg(F.count("*").alias("i"))
+        .agg(F.count("*").alias("nd"), F.count("hit").alias("i"))
     )
     jac = F.col("i").cast("double") / (F.col("nd") + F.col("ne") - F.col("i"))
     return (
-        inter.join(szd.select(F.col("doc_id").alias("delta_doc"), "nd"), "delta_doc")
-        .join(
+        inter.join(
             sizes_e.select(
                 F.col("doc_id").alias("corpus_doc"), F.col("n").alias("ne")
             ),
@@ -797,13 +995,14 @@ _RETIRED = ".retired_"              # old component parked mid-swap (hidden)
 
 def _band_table_location(spark: SparkSession, idx: MinHashIndex) -> str:
     """Resolve the band table's CURRENT data directory from the catalog —
-    after a compaction it is no longer the build-time bands/ directory."""
-    loc = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {idx.table_name}")
-        .filter(F.col("col_name") == "Location")
-        .first()["data_type"]
-    )
-    return loc.removeprefix("file:")
+    after a compaction it is no longer the build-time bands/ directory.
+    The command's rows are filtered on the driver: collecting a command
+    result runs no Spark job, a DataFrame filter over it does."""
+    return next(
+        r["data_type"]
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {idx.table_name}").collect()
+        if r["col_name"] == "Location"
+    ).removeprefix("file:")
 
 
 def _move_parquet_files(
@@ -855,6 +1054,9 @@ def _publish_append(
     )
     _move_parquet_files(
         os.path.join(staging, "df_stats"), idx.df_stats_path, moved
+    )
+    _move_parquet_files(
+        os.path.join(staging, "probe_stats"), idx.probe_stats_path, moved
     )
     _move_parquet_files(
         os.path.join(staging, "bands"), _band_table_location(spark, idx), moved
@@ -996,7 +1198,6 @@ def recover_minhash_index(
       them anyway (dot-prefixed directories are hidden from parquet
       readers)."""
     import glob
-    import json
     import shutil
 
     for marker in sorted(
@@ -1072,9 +1273,12 @@ def recover_minhash_index(
                 os.path.join(idx.index_dir, f"bands_rebuild_{batch}"),
                 ignore_errors=True,
             )
-        for tmp in glob.glob(os.path.join(idx.index_dir, ".commit_tmp_*")):
+        for tmp in glob.glob(
+            os.path.join(idx.index_dir, ".commit_tmp_*")
+        ) + glob.glob(os.path.join(idx.index_dir, _CARRY_TMP + "*")):
             # a rebuild that died between manifest write and the marker
-            # rename: uncommitted by definition (the marker never existed)
+            # rename: uncommitted by definition (the marker never existed);
+            # likewise a carried-stats write that died before its rename
             try:
                 os.remove(tmp)
             except FileNotFoundError:
@@ -1093,40 +1297,52 @@ def append_to_minhash_index(
     idx: MinHashIndex,
     delta_docs: DataFrame,
     _crash: str | None = None,
+    _sketch: _DeltaSketch | None = None,
+    _probe_stats: tuple[int, int, int] | None = None,
 ) -> None:
     """Fold a new batch into the stored index — the near-dup twin of
     merge_hash_links_onto_index: the (huge) index stays in place, only the
     (small) delta moves. Bands are appended INTO the table's bucket layout
     (each append adds one file set per bucket; bucketed-join co-location is
     preserved — plan-gated post-append in tests/test_minhash_index.py),
-    shingles and sizes land as ordinary parquet files in their directories.
+    shingles, sizes and the stats components land as ordinary parquet
+    files in their directories.
 
     CRASH ATOMICITY (the reference's flush is per-batch transactional,
     lib/deduplicator.ex:121-144 via Repo.insert_all; probe_and_ingest is
-    billed as the nightly transaction, so this append must be one too —
-    judge r8 #1). Three naive sequential appends leave a torn index on a
+    billed as the nightly transaction, so this append must be one too).
+    Naive sequential appends leave a torn index on a
     mid-append crash, and a naive retry re-appends shingles so the
     recomputed sizes double-count and every Jaccard for those docs is
     wrong. Protocol (write-ahead staging + single-file commit point):
 
-    1. STAGE all three components under ``index_dir/.append_<batch>/`` —
-       dot-prefixed, so every parquet reader ignores the lot. Sizes AND
-       bands are computed from the staged shingle files read back, so no
-       component can drift from what the shingles component will hold.
-       The bands are written through the SAME bucketed writer (a staging
-       catalog table, dropped immediately — external, files survive), so
-       the staged files carry correct bucket suffixes for the live layout.
+    1. STAGE every component under ``index_dir/.append_<batch>/`` —
+       dot-prefixed, so every parquet reader ignores the lot — from ONE
+       pinned relation derived from the batch's sketch, so no component can
+       drift from what the shingles component will hold. Two writes: a
+       segment partitioned by component (shingles, sizes, df_stats,
+       hot_delta and, from probe_and_ingest, the probe-stats row), whose
+       partitions are renamed into per-component staging directories; and
+       the bands through the SAME bucketed writer (a staging catalog
+       table, dropped immediately — external, files survive), so the staged
+       files carry correct bucket suffixes for the live layout.
     2. COMMIT by creating ``index_dir/_commit_append_<batch>`` — one
        atomic file creation; its existence IS the transaction boundary.
     3. PUBLISH by renaming staged files into the live directories, then
        remove staging, then the marker (marker last: a crash anywhere
        re-enters roll-forward via recover_minhash_index, which probe and
        compact both run first).
+    4. CARRY the index's stats forward: when the pre-append state had a
+       carried occupancy bound or staleness inputs, advance them with the
+       batch's own stats (observed while pinning the staged relation — no
+       extra job) under the post-publish state token.
 
     A crash before (2) → the batch never happened (writers discard the
     orphaned staging; readers never saw it). A crash after (2) → the next
-    probe/append/compact completes the publish; renames are idempotent.
-    Fault-injected at every boundary in tests/test_minhash_index.py.
+    probe/append/compact completes the publish; renames are idempotent. A
+    crash before (4) only leaves the carried stats stale, so the next
+    reader recomputes them. Fault-injected at every boundary in
+    tests/test_minhash_index.py.
 
     Ingestion contract: delta doc_ids are NEW (the probe-then-ingest
     pipeline assigns fresh ids; an id collision would double-count sizes —
@@ -1140,13 +1356,178 @@ def append_to_minhash_index(
     until compaction has applied the deletion (judge r8 advice). The delta
     is capped with the index's FROZEN hot set — see the module docstring.
 
+    ``_sketch`` / ``_probe_stats`` (private, from probe_and_ingest): the
+    pinned sketch of ``delta_docs`` and the run's (n_oversized_buckets,
+    n_slow_path_docs, bucket_cap) row, which then commits with the batch.
+
     Runs under the single-writer maintenance lease (:func:`writer_lease`,
     judge r10 next-round #1): a concurrent append/compact/rebuild blocks
     briefly then fails with IndexWriterContention instead of interleaving
     staging; the fencing check right before the commit marker guarantees a
     stalled, taken-over writer can never commit."""
     with writer_lease(idx) as lease:
-        _append_under_lease(spark, idx, delta_docs, lease, _crash)
+        _append_under_lease(
+            spark, idx, delta_docs, lease, _crash, _sketch, _probe_stats
+        )
+
+
+# staged components written by the segment write (partition column "comp")
+_SEGMENT_COMPONENTS = ("shingles", "sizes", "df_stats", "hot_delta", "probe_stats")
+_PROBE_STATS_COLS = ("n_oversized_buckets", "n_slow_path_docs", "bucket_cap")
+_STAGED_ROWS_PER_TASK = 1_000_000
+
+
+def _staged_rows(
+    kept: _DeltaSketch, pre_newly_hot: list[str], obs: Observation
+) -> DataFrame:
+    """Every row the batch stages, as one pinned relation tagged by
+    ``comp``: the capped shingles, the bands, and ONE aggregation that
+    yields sizes (per doc), df_stats and hot_delta (per shingle) plus the
+    batch's band-key occupancy (``occ``, stats only, never written).
+    ``obs`` collects, during the pinning job, what carrying the index's
+    stats forward needs: the staged doc count, the largest key occupancy,
+    the hot hits, and the df contributions of the shingles the carried
+    verdict tracks (and the largest of the others)."""
+    null_long, null_str = F.lit(None).cast("long"), F.lit(None).cast("string")
+    no_band = [
+        F.lit(None).cast("int").alias("band"),
+        null_str.alias("x"),
+        null_str.alias("y"),
+    ]
+
+    def key(comp: str, doc_id, sh):
+        return F.struct(
+            F.lit(comp).alias("comp"), doc_id.alias("doc_id"), sh.alias("sh")
+        )
+
+    doc_id, sh = F.col("doc_id"), F.col("sh")
+    keys = kept.shingles.select(
+        F.explode(
+            F.when(F.col("hot"), F.array(key("hot_delta", null_long, sh)))
+            .otherwise(
+                F.array(key("sizes", doc_id, null_str), key("df_stats", null_long, sh))
+            )
+        ).alias("k")
+    ).select("k.*", *no_band)
+    occ = kept.bands.select(
+        F.lit("occ").alias("comp"),
+        null_long.alias("doc_id"),
+        null_str.alias("sh"),
+        *BAND_KEY,
+    )
+    counts = (
+        keys.unionByName(occ)
+        .groupBy("comp", "doc_id", "sh", *BAND_KEY)
+        .agg(F.count("*").alias("c"))
+    )
+    rows = counts.unionByName(
+        kept.capped.select(
+            F.lit("shingles").alias("comp"), "doc_id", "sh", *no_band,
+            null_long.alias("c"),
+        )
+    ).unionByName(
+        kept.bands.select(
+            F.lit("bands").alias("comp"), "doc_id", null_str.alias("sh"),
+            *BAND_KEY, null_long.alias("c"),
+        )
+    )
+    comp, c = F.col("comp"), F.col("c")
+    df_row = comp == "df_stats"
+    tracked = sh.isin(pre_newly_hot) if pre_newly_hot else F.lit(False)
+    return rows.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.count(F.when(comp == "sizes", 1)).alias("n_docs"),
+        F.max(F.when(comp == "sizes", doc_id)).alias("max_doc_id"),
+        F.count(F.when(comp == "bands", 1)).alias("n_bands"),
+        F.max(F.when(comp == "occ", c)).alias("max_occ"),
+        F.max(F.when(df_row & ~tracked, c)).alias("max_untracked_df"),
+        F.collect_list(F.when(comp == "hot_delta", F.struct("sh", "c"))).alias(
+            "hot_hits"
+        ),
+        F.collect_list(F.when(df_row & tracked, F.struct("sh", "c"))).alias(
+            "tracked_df"
+        ),
+    ).localCheckpoint()
+
+
+def _write_tasks(n_rows: int) -> int:
+    """Writer tasks for ``n_rows`` staged rows: each task writes one file
+    per component (per bucket, for bands) it holds, and at delta sizes the
+    per-file and per-task overhead, not the rows, is the write's cost."""
+    return max(1, -(-n_rows // _STAGED_ROWS_PER_TASK))
+
+
+def _stage_segment(
+    spark: SparkSession,
+    rows: DataFrame,
+    n_tasks: int,
+    probe_stats: tuple[int, int, int] | None,
+    staging: str,
+) -> None:
+    """Write 1 of 2: every non-band component in ONE partitioned write, then
+    each ``comp=<name>`` partition is renamed to ``staging/<name>``. Files
+    carry the union schema (unused columns null); every reader of these
+    components reads through an explicit per-component schema."""
+    from sabd_deduplicator_spark.sources.writers import overwrite_parquet
+
+    null_long = F.lit(None).cast("long")
+    seg = rows.filter(F.col("comp").isin(*_SEGMENT_COMPONENTS)).select(
+        "comp",
+        "doc_id",
+        "sh",
+        F.when(F.col("comp") == "sizes", F.col("c")).alias("n"),
+        F.when(F.col("comp") != "sizes", F.col("c")).alias("df"),
+        *[null_long.alias(col) for col in _PROBE_STATS_COLS],
+    )
+    if probe_stats is not None:
+        # a literal row (no Python-side DataFrame conversion)
+        seg = seg.unionByName(
+            spark.range(1).select(
+                F.lit("probe_stats").alias("comp"),
+                null_long.alias("doc_id"),
+                F.lit(None).cast("string").alias("sh"),
+                null_long.alias("n"),
+                null_long.alias("df"),
+                *[
+                    F.lit(int(v)).cast("long").alias(col)
+                    for col, v in zip(_PROBE_STATS_COLS, probe_stats)
+                ],
+            )
+        )
+    out = os.path.join(staging, "_segment")
+    overwrite_parquet(seg.coalesce(n_tasks), out, partition_by=["comp"])
+    for comp in _SEGMENT_COMPONENTS:
+        part = os.path.join(out, f"comp={comp}")
+        if os.path.isdir(part):
+            os.rename(part, os.path.join(staging, comp))
+
+
+def _stage_bands(
+    spark: SparkSession,
+    rows: DataFrame,
+    n_tasks: int,
+    idx: MinHashIndex,
+    staging: str,
+    batch: str,
+) -> None:
+    """Write 2 of 2: the bands through the SAME bucketed writer the table
+    was built with (a staging catalog table, dropped right away — external,
+    the files survive), so the staged files carry the bucket suffixes the
+    live table's bucketed scan reads."""
+    from sabd_deduplicator_spark.sources.writers import save_bucketed_table
+
+    staging_tbl = f"{idx.table_name}__append_{batch}"
+    save_bucketed_table(
+        rows.filter(F.col("comp") == "bands")
+        .select("doc_id", *BAND_KEY)
+        .coalesce(n_tasks),
+        staging_tbl,
+        BAND_KEY,
+        n_buckets=idx.n_buckets,
+        path=os.path.join(staging, "bands"),
+    )
+    spark.sql(f"DROP TABLE {staging_tbl}")
 
 
 def _append_under_lease(
@@ -1155,13 +1536,10 @@ def _append_under_lease(
     delta_docs: DataFrame,
     lease: _WriterLease,
     _crash: str | None = None,
+    _sketch: _DeltaSketch | None = None,
+    _probe_stats: tuple[int, int, int] | None = None,
 ) -> None:
     import shutil
-
-    from sabd_deduplicator_spark.sources.writers import (
-        overwrite_parquet,
-        save_bucketed_table,
-    )
 
     recover_minhash_index(spark, idx, roll_back=True, _owns_lease=True)
     if idx.has_tombstones():
@@ -1179,6 +1557,8 @@ def _append_under_lease(
                 "compact_minhash_index has physically applied the deletion "
                 "— re-ingest under a fresh doc_id or compact first"
             )
+    pre = _read_carry(idx, _carry_token(idx))
+    sketch = _sketch or _sketch_delta(spark, idx, delta_docs)
     # conflict-ignoring upsert on doc_id (the reference's on_conflict:
     # :nothing, writers.append_if_absent's semantics): ids already present
     # are skipped, which is exactly what makes RETRY-AFTER-CRASH exactly-
@@ -1186,73 +1566,41 @@ def _append_under_lease(
     # published (recovery above rolled it forward) and appends nothing,
     # instead of double-counting every size. Shaped so the INDEX never
     # shuffles: sizes (the cheapest component — one row per stored doc) is
-    # scanned once against the broadcast delta ids; the resulting present
+    # scanned once against the broadcast sketch ids; the resulting present
     # set is at most delta-sized, so it broadcasts back into the anti-join.
-    present = (
-        idx.sizes(spark)
-        .select("doc_id")
-        .join(
-            broadcast(delta_docs.select("doc_id").distinct()),
-            "doc_id",
-            "left_semi",
+    # When the carried largest stored doc_id is below every delta id (fresh
+    # ids from an increasing sequence), no id can be present: no lookup.
+    kept = sketch
+    max_id, lo = pre.get("max_doc_id"), sketch.min_doc_id
+    if max_id is None or (lo is not None and lo <= max_id):
+        present = (
+            idx.sizes(spark)
+            .select("doc_id")
+            .join(broadcast(sketch.shingles.select("doc_id")), "doc_id", "left_semi")
         )
+        kept = sketch.only(present, "left_anti")
+    verdict = pre.get("verdict")
+    obs = Observation()
+    rows = _staged_rows(
+        kept,
+        sorted(verdict["newly_hot_df"]) if verdict else [],
+        obs,
     )
-    delta_docs = delta_docs.join(broadcast(present), "doc_id", "left_anti")
-    # short-circuit an empty deduped delta (judge r9 advice): a retry of an
-    # already-landed batch — the exactly-once path — used to stage all
-    # three components, create a marker and publish zero-row parquet files;
-    # one delta-sized existence check makes it a true no-op instead
-    if delta_docs.isEmpty():
+    seen = obs.get
+    # an empty deduped batch — a retry of an already-landed batch, the
+    # exactly-once path — is a true no-op: nothing is
+    # staged, no marker, no zero-row files
+    if seen["rows"] == 0 and _probe_stats is None:
         return
     batch = uuid.uuid4().hex[:12]
     staging = os.path.join(idx.index_dir, _APPEND_STAGING + batch)
     marker = os.path.join(idx.index_dir, _APPEND_MARKER + batch)
-    shd, _ = delta_band_shingles(spark, idx, delta_docs)
-    overwrite_parquet(
-        shd.select("doc_id", "sh"), os.path.join(staging, "shingles")
+    n_bands = seen["n_bands"]
+    _stage_segment(
+        spark, rows, _write_tasks(seen["rows"] - n_bands), _probe_stats, staging
     )
-    # the CAPPED-OUT side of the same delta: this batch's df contributions
-    # to the frozen hot set, staged as the hot_delta stats component so the
-    # in-pipeline staleness verdict can observe hot-shingle drift (cooling)
-    # without re-processing any text — see MinHashIndex.hot_delta
-    from sabd_deduplicator_spark.operators.similarity import shingles_of
-
-    hot_hits = (
-        shingles_of(delta_docs)
-        .join(broadcast(idx.hot(spark).select("sh")), "sh", "left_semi")
-        .groupBy("sh")
-        .agg(F.count("*").cast("long").alias("df"))
-    )
-    overwrite_parquet(hot_hits, os.path.join(staging, "hot_delta"))
-    # recompute sizes AND bands from the staged PERSISTED rows so neither
-    # can drift from what the shingles component will actually hold
-    staged_sh = spark.read.schema("doc_id long, sh string").parquet(
-        os.path.join(staging, "shingles")
-    )
-    overwrite_parquet(
-        staged_sh.groupBy("doc_id").agg(F.count("*").alias("n")),
-        os.path.join(staging, "sizes"),
-    )
-    # the batch's per-shingle df contribution for the NON-hot shingles —
-    # the vocabulary-sized stats component the staleness verdict sums
-    # instead of re-scanning the occurrence-sized shingles/ relation
-    # (see MinHashIndex.df_stats); derived from the same staged rows as
-    # sizes, so it can never drift from what shingles/ will hold
-    overwrite_parquet(
-        staged_sh.groupBy("sh").agg(F.count("*").cast("long").alias("df")),
-        os.path.join(staging, "df_stats"),
-    )
-    from sabd_deduplicator_spark.operators.similarity import minhash_bands
-
-    staging_tbl = f"{idx.table_name}__append_{batch}"
-    save_bucketed_table(
-        minhash_bands(staged_sh),
-        staging_tbl,
-        BAND_KEY,
-        n_buckets=idx.n_buckets,
-        path=os.path.join(staging, "bands"),
-    )
-    spark.sql(f"DROP TABLE {staging_tbl}")  # external: staged files survive
+    if n_bands:
+        _stage_bands(spark, rows, _write_tasks(n_bands), idx, staging, batch)
     if _crash == "staged":
         raise InjectedCrash("staged")
     lease.heartbeat()  # staging (the long stage) is done; still alive
@@ -1267,6 +1615,64 @@ def _append_under_lease(
         os.remove(marker)
     except FileNotFoundError:
         pass  # a concurrent probe's roll-forward already resolved it
+    _write_carry(
+        idx,
+        _carry_token(idx),
+        **_advance_carry(pre, seen, _probe_stats[0] if _probe_stats else 0),
+    )
+
+
+def _advance_carry(pre: dict, seen: dict, n_skips: int) -> dict:
+    """The post-append carried state, from the pre-append one and the
+    batch's observed stats — exact, or absent when it cannot be.
+
+    Occupancy: every key's new occupancy is its old one (≤ the old bound)
+    plus the batch's own, so old bound + the batch's max key occupancy is
+    an upper bound (exact only if the batch added no band rows).
+
+    Verdict inputs: n grows by the staged docs, each hot shingle's df by
+    its hot hits. A stored shingle is newly hot iff 2·df > n. The carried
+    set tracks every such shingle with its df; every other stored shingle
+    has df ≤ ``max_cold_df``. An untracked shingle gains at most the
+    batch's largest untracked contribution d, so while 2·(max_cold_df + d)
+    ≤ n' none can cross, and the tracked set, updated with its own
+    contributions, is exactly the new set (shingles that fall back under
+    the bar join the cold bound). Otherwise the inputs are dropped and the
+    next verdict recomputes them from the components."""
+    out = {}
+    if pre.get("max_doc_id") is not None:
+        out["max_doc_id"] = max(pre["max_doc_id"], seen["max_doc_id"] or 0)
+    occ = pre.get("occupancy")
+    if occ is not None:
+        add = seen["max_occ"] or 0
+        out["occupancy"] = {
+            "bound": occ["bound"] + add, "exact": occ["exact"] and not add
+        }
+    v = pre.get("verdict")
+    if v is None:
+        return out
+    n = v["n_docs"] + seen["n_docs"]
+    max_cold = v["max_cold_df"] + (seen["max_untracked_df"] or 0)
+    if 2 * max_cold <= n:
+        hot_df = dict(v["hot_df"])
+        for r in seen["hot_hits"]:
+            hot_df[r["sh"]] += r["c"]
+        d = {r["sh"]: r["c"] for r in seen["tracked_df"]}
+        newly = {}
+        for sh, df in v["newly_hot_df"].items():
+            df += d.get(sh, 0)
+            if 2 * df > n:
+                newly[sh] = df
+            else:
+                max_cold = max(max_cold, df)
+        out["verdict"] = {
+            "n_docs": n,
+            "hot_df": hot_df,
+            "newly_hot_df": newly,
+            "max_cold_df": max_cold,
+            "n_skips": v["n_skips"] + n_skips,
+        }
+    return out
 
 
 def forget_from_minhash_index(
@@ -1554,15 +1960,14 @@ def index_staleness_from_stats(spark: SparkSession, idx: MinHashIndex) -> dict:
     stores no rows anywhere and is invisible to the whole index, probes
     included, so excluding it from the denominator is self-consistent.
 
-    Four bounded scalar jobs (sizes count, hot-side count over the small
-    hot relation, one sum over the vocabulary-sized df_stats relation, one
-    sum over the tiny probe_stats log), MEMOIZED per index state — the
-    state token is the stats components' file listing (the
-    _max_band_occupancy device), so back-to-back verdicts between
-    maintenance ops are free and the nightly post-append verdict costs one
-    stats-sized pass, never a corpus-sized one (judge r10 advice)."""
-    from sabd_deduplicator_spark.catalog import evict_dead_app_entries
-
+    Cost, MEMOIZED per index state (the state token is the stats
+    components' file listing — the _max_band_occupancy device) and, behind
+    the memo, CARRIED in the index directory: an append that found carried
+    inputs advances them from its batch's own stats (_advance_carry), so
+    the nightly post-append verdict reads one small file, in any process.
+    Without carried inputs the recompute is one stats-sized query — one
+    aggregate and one ordered collect, two Spark jobs — never a
+    corpus-sized pass; see :func:`_verdict_inputs`."""
     token = _index_state_token(
         idx,
         ("sizes", "df_stats", "hot", "hot_delta", "tombstones", "probe_stats"),
@@ -1571,36 +1976,18 @@ def index_staleness_from_stats(spark: SparkSession, idx: MinHashIndex) -> dict:
     if key in _STALENESS_MEMO:
         return dict(_STALENESS_MEMO[key])
     evict_dead_app_entries(_STALENESS_MEMO, key[0])
-    tomb = broadcast(idx.tombstones(spark)) if idx.has_tombstones() else None
-    sizes = idx.sizes(spark)
-    if tomb is not None:
-        sizes = sizes.join(tomb, "doc_id", "left_anti")
-    n_live = sizes.count()
-    extra = idx.hot_delta(spark).groupBy("sh").agg(F.sum("df").alias("extra"))
-    n_cooled = (
-        idx.hot(spark)
-        .join(extra, "sh", "left")
-        .filter(
-            (F.col("df") + F.coalesce("extra", F.lit(0))) * 2 <= F.lit(n_live)
-        )
-        .count()
-    )
-    dfs = idx.df_stats(spark)
-    if dfs is not None:
-        stored_df = dfs.groupBy("sh").agg(F.sum("df").alias("df"))
-    else:
-        she = idx.shingles(spark)
-        if tomb is not None:
-            she = she.join(tomb, "doc_id", "left_anti")
-        stored_df = she.groupBy("sh").agg(F.count("*").alias("df"))
-    n_newly_hot = stored_df.filter(F.col("df") * 2 > F.lit(n_live)).count()
-    n_skips = int(
-        idx.probe_stats(spark)
-        .agg(F.coalesce(F.sum("n_oversized_buckets"), F.lit(0)))
-        .first()[0]
-    )
+    carry_token = _carry_token(idx)
+    inputs = _read_carry(idx, carry_token).get("verdict")
+    if inputs is None:
+        inputs = _verdict_inputs(spark, idx)
+        max_doc_id = inputs.pop("max_doc_id")
+        _write_carry(idx, carry_token, verdict=inputs, max_doc_id=max_doc_id)
+    n = inputs["n_docs"]
+    n_cooled = sum(2 * df <= n for df in inputs["hot_df"].values())
+    n_newly_hot = len(inputs["newly_hot_df"])
+    n_skips = inputs["n_skips"]
     report = {
-        "n_docs": n_live,
+        "n_docs": n,
         "n_cooled_hot": n_cooled,
         "n_newly_hot": n_newly_hot,
         "n_oversized_probe_buckets": n_skips,
@@ -1608,6 +1995,73 @@ def index_staleness_from_stats(spark: SparkSession, idx: MinHashIndex) -> dict:
     }
     _STALENESS_MEMO[key] = dict(report)
     return report
+
+
+_VERDICT_TOP_ROWS = 4096
+
+
+def _verdict_inputs(spark: SparkSession, idx: MinHashIndex) -> dict:
+    """The staleness verdict's inputs recomputed from the components: the
+    live doc count (and largest doc_id), every hot shingle's current df,
+    the stored shingles over the df·2 > n threshold with their df, the
+    largest df below it, and the skip count.
+
+    One aggregation over every stats row, tagged by component, then one
+    ordered collect: the per-component totals and hot rows first, then the
+    stored df rows from the largest down. The df·2 > n rows are a prefix of
+    that order, so the collect is complete once it reaches a df under the
+    bar; the top-K limit only grows when it did not."""
+    tomb = broadcast(idx.tombstones(spark)) if idx.has_tombstones() else None
+    sizes = idx.sizes(spark)
+    if tomb is not None:
+        sizes = sizes.join(tomb, "doc_id", "left_anti")
+    dfs = idx.df_stats(spark)
+    if dfs is None:
+        dfs = idx.shingles(spark)
+        if tomb is not None:
+            dfs = dfs.join(tomb, "doc_id", "left_anti")
+        dfs = dfs.select("sh", F.lit(1).cast("long").alias("df"))
+
+    def tagged(df: DataFrame, tag: str, sh, v, top=None) -> DataFrame:
+        return df.select(
+            F.lit(tag).alias("tag"),
+            sh.alias("sh"),
+            v.cast("long").alias("v"),
+            (top if top is not None else F.lit(None)).cast("long").alias("top"),
+        )
+
+    no_sh = F.lit(None).cast("string")
+    stats = (
+        tagged(sizes, "n", no_sh, F.lit(1), F.col("doc_id"))
+        .unionByName(tagged(idx.hot(spark), "hot", F.col("sh"), F.col("df"), F.lit(1)))
+        .unionByName(tagged(idx.hot_delta(spark), "hot", F.col("sh"), F.col("df")))
+        .unionByName(
+            tagged(idx.probe_stats(spark), "skip", no_sh, F.col("n_oversized_buckets"))
+        )
+        .unionByName(tagged(dfs, "df", F.col("sh"), F.col("df")))
+        .groupBy("tag", "sh")
+        .agg(F.sum("v").alias("v"), F.max("top").alias("top"))
+        .orderBy((F.col("tag") == "df").asc(), F.desc("v"))
+    )
+    k = _VERDICT_TOP_ROWS
+    while True:
+        rows = stats.limit(k).collect()
+        n_row = next((r for r in rows if r["tag"] == "n"), None)
+        n = n_row["v"] if n_row else 0
+        df_rows = [r for r in rows if r["tag"] == "df"]
+        if len(rows) < k or (df_rows and 2 * df_rows[-1]["v"] <= n):
+            break
+        k *= 4
+    return {
+        "n_docs": n,
+        # hot rows carry top=1; a hot_delta row alone (no stored hot row)
+        # is not a hot shingle
+        "hot_df": {r["sh"]: r["v"] for r in rows if r["tag"] == "hot" and r["top"]},
+        "newly_hot_df": {r["sh"]: r["v"] for r in df_rows if 2 * r["v"] > n},
+        "max_cold_df": next((r["v"] for r in df_rows if 2 * r["v"] <= n), 0),
+        "n_skips": sum(r["v"] or 0 for r in rows if r["tag"] == "skip"),
+        "max_doc_id": n_row["top"] if n_row else None,
+    }
 
 
 # the stats-based verdict over the stored stratum index (built once per
@@ -1886,7 +2340,6 @@ def _rebuild_under_lease(
     _crash: str | None = None,
 ) -> dict:
     import glob
-    import json
     import shutil
 
     from sabd_deduplicator_spark.operators.similarity import (
@@ -1981,6 +2434,12 @@ def probe_and_ingest(
     reference's deduplicate flow (probe the hash table, store only unseen
     chunks, lib/deduplicator.ex:84-119) lifted to near-dup granularity.
 
+    ONE PASS over the delta: its shingles (flagged against the frozen hot
+    set) and band keys are computed once and pinned, and the probe, the
+    slow path and the append's staging all read that sketch — the text is
+    never re-shingled, and every staged component derives from the same
+    pinned rows.
+
     Returns (dup_pairs, novel_docs, report): the probe's verified pairs,
     the delta docs that entered the index, and the run's operational
     report — the probe's crowded-bucket skip count (no silent caps) plus
@@ -1988,7 +2447,9 @@ def probe_and_ingest(
     :func:`index_staleness_from_stats`, so the pipeline itself surfaces
     ``rebuild_recommended`` every night and the monitor→rebuild loop
     (:func:`rebuild_minhash_index`) is driven by the transaction, not by
-    an operator remembering to run a query (judge r9 #5). The pairs are
+    an operator remembering to run a query. The append
+    carries the index's stats forward, so that verdict is normally read
+    from the carried state rather than recomputed. The pairs are
     materialized (localCheckpoint, eager) BEFORE the append so their
     lineage can never observe the post-append index state.
     Rebuild-equivalence after the call — index == from-scratch build over
@@ -2018,47 +2479,39 @@ def probe_and_ingest(
     the docs that actually touch crowded buckets, instead of every probe
     paying it (``report["n_slow_path_docs"]``, no silent routing).
 
-    The run's skip stats are APPENDED to the index's ``probe_stats/`` log
-    after the ingest lands (advisory, not transactional: a crash between
-    append and this write loses one log row, never index state), where
-    :func:`index_staleness_from_stats` reads them back as a direct
+    The run's skip stats (one ``probe_stats/`` row) COMMIT WITH THE BATCH:
+    the row is part of the append's staged segment, so it lands exactly
+    when the batch does — also when no doc is novel, as the batch's only
+    row — and :func:`index_staleness_from_stats` reads it back as a direct
     crowding → rebuild signal (judge r10 next-round #3)."""
-    from sabd_deduplicator_spark.sources.writers import append_parquet
-
     report: dict = {}
+    sketch = _sketch_delta(spark, idx, delta_docs)
     pairs = probe_minhash_index(
-        spark, idx, delta_docs, bucket_cap=bucket_cap, stats=report
+        spark, idx, delta_docs, bucket_cap=bucket_cap, stats=report,
+        _sketch=sketch,
     ).localCheckpoint()
     at_risk = report.pop("at_risk_docs", None)
+    n_at_risk = report.pop("n_at_risk_docs", 0)
     report["n_slow_path_docs"] = 0
-    if at_risk is not None:
-        n_at_risk = at_risk.count()
-        if n_at_risk:
-            risky = delta_docs.join(broadcast(at_risk), "doc_id", "left_semi")
-            slow = probe_minhash_index(
-                spark, idx, risky, bucket_cap=None
-            ).localCheckpoint()
-            pairs = pairs.unionByName(slow).localCheckpoint()
-            report["n_slow_path_docs"] = n_at_risk
-    novel = delta_docs.join(
-        pairs.select(F.col("delta_doc").alias("doc_id")).distinct(),
-        "doc_id",
-        "left_anti",
-    )
-    append_to_minhash_index(spark, idx, novel)
-    append_parquet(
-        spark.createDataFrame(
-            [
-                (
-                    int(report.get("n_oversized_buckets", 0)),
-                    int(report["n_slow_path_docs"]),
-                    int(report.get("bucket_cap") or 0),
-                )
-            ],
-            "n_oversized_buckets bigint, n_slow_path_docs bigint, "
-            "bucket_cap bigint",
+    if n_at_risk:
+        risky = delta_docs.join(broadcast(at_risk), "doc_id", "left_semi")
+        slow = probe_minhash_index(
+            spark, idx, risky, bucket_cap=None, _sketch=sketch.only(at_risk)
+        ).localCheckpoint()
+        pairs = pairs.unionByName(slow).localCheckpoint()
+        report["n_slow_path_docs"] = n_at_risk
+    paired = pairs.select(F.col("delta_doc").alias("doc_id"))
+    novel = delta_docs.join(broadcast(paired), "doc_id", "left_anti")
+    append_to_minhash_index(
+        spark,
+        idx,
+        novel,
+        _sketch=sketch.only(paired, "left_anti"),
+        _probe_stats=(
+            report.get("n_oversized_buckets", 0),
+            report["n_slow_path_docs"],
+            report.get("bucket_cap") or 0,
         ),
-        idx.probe_stats_path,
     )
     report.update(index_staleness_from_stats(spark, idx))
     return pairs, novel, report

@@ -7,11 +7,35 @@ Used by tests/test_plans.py to pin plan properties:
 - no row-at-a-time Python UDFs (BatchEvalPython) anywhere; Arrow-batched
   (ArrowEvalPython / MapInPandas) only where multimodal needs Python,
 - shuffle (Exchange) counts don't regress.
+
+:func:`count_jobs` counts the Spark jobs a block of driver code runs — at
+small inputs the per-job fixed cost, not the rows, sets an operation's
+time, so job counts are what tests and tools budget.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import uuid
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
+
+
+@contextmanager
+def count_jobs(spark: SparkSession):
+    """Yield a dict whose ``"jobs"`` is, after the block, the number of
+    Spark jobs the block started — AQE map-stage and broadcast jobs
+    included, as they all carry the block's job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    out: dict = {}
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        out["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def formatted_plan(df: DataFrame) -> str:

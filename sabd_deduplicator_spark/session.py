@@ -32,8 +32,25 @@ def _effective_blas_threads() -> str:
     return "1"
 
 
+def default_cpus() -> str:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory() -> str:
+    """$SPARK_DRIVER_MEM, else half of the host's physical memory, at least
+    1g — a local session's driver JVM is the whole cluster, so its heap
+    must fit the host."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("SPARK_DRIVER_MEM") or f"{max(1, total // 2 // 2**30)}g"
+
+
 def get_spark(app_name: str = "sabd-dedup-spark") -> SparkSession:
     """local[$SPARK_GRAFT_CPUS] session with AQE + Arrow enabled.
+
+    Defaults fit the host: SPARK_GRAFT_CPUS defaults to the CPUs this
+    process may run on, SPARK_DRIVER_MEM to half of physical memory (at
+    least 1g); both environment variables still override.
 
     Settings chosen for scale posture (they all carry to a real cluster):
     - AQE on: runtime shuffle coalescing + skew-join splitting (duplicated
@@ -44,7 +61,7 @@ def get_spark(app_name: str = "sabd-dedup-spark") -> SparkSession:
     """
     import tempfile
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     # adversarial-determinism probes (PERF.md): odd partition counts and AQE
     # off must not change any oracle-checked value
     shuffle_parts = os.environ.get(
@@ -62,7 +79,7 @@ def get_spark(app_name: str = "sabd-dedup-spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", aqe)
         # BLAS threads inside Python workers: ONE per worker (env-overridable
         # for cluster shapes with fewer, fatter executors). Parallelism comes
-        # from the task/worker fan-out — 32 workers on this host — so an
+        # from the task/worker fan-out — one worker per CPU — so an
         # uncapped OpenBLAS pool both oversubscribes cores at steady state
         # and, far worse on this host, pays a pathological pool spin-up in
         # every freshly FORKED worker (measured standalone: 32 concurrent
@@ -85,7 +102,7 @@ def get_spark(app_name: str = "sabd-dedup-spark") -> SparkSession:
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     # Local-mode leg of the BLAS cap: the Python worker DAEMON preloads
     # numpy (pyspark.daemon imports pyspark.worker at startup), and OpenBLAS

@@ -48,7 +48,22 @@ def test_bucketed_join_has_no_shuffle(no_broadcast, sf_dir):
     assert count_exchanges(plain) > 0
 
 
-def test_incremental_merge_probes_bucketed_index_in_place(no_broadcast):
+@pytest.fixture()
+def shuffle_partitions_off_buckets(no_broadcast):
+    """Pin spark.sql.shuffle.partitions to a value other than the tests'
+    n_buckets (8): when the two are equal, the delta's aggregate exchange
+    already matches the bucketing and the planner reuses it, so the
+    exchange counts would depend on the host's default partition count."""
+    spark = no_broadcast
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    yield spark
+    spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_incremental_merge_probes_bucketed_index_in_place(
+    shuffle_partitions_off_buckets,
+):
     """The 100×-scale story for the reference's per-flush B-tree probe
     (round-3 verdict item 6): folding a delta into a BUCKETED on-disk
     hash_links index must Exchange only the delta — exactly one Exchange in
@@ -58,7 +73,7 @@ def test_incremental_merge_probes_bucketed_index_in_place(no_broadcast):
     from sabd_deduplicator_spark.operators.dedup import merge_hash_links_onto_index
     from sabd_deduplicator_spark.sources.writers import save_bucketed_table
 
-    spark = no_broadcast
+    spark = shuffle_partitions_off_buckets
     index_rows = [("h1", 1, 0, 3), ("h2", 1, 1, 1)]
     save_bucketed_table(
         spark.createDataFrame(

@@ -22,7 +22,7 @@ from sabd_deduplicator_spark.operators.minhash_index import (
     delta_band_shingles,
     probe_minhash_index,
 )
-from sabd_deduplicator_spark.plans.inspect import count_exchanges
+from sabd_deduplicator_spark.plans.inspect import count_exchanges, count_jobs
 
 
 def _docs(spark, rows, id_offset=0):
@@ -811,3 +811,117 @@ def test_append_of_tombstoned_doc_id_is_rejected(spark, tmp_path):
     )
     assert idx.sizes(spark).filter(F.col("doc_id") == 3).count() == 1
     spark.sql("DROP TABLE IF EXISTS mh_t_rej")
+
+
+# Spark jobs one probe_and_ingest may run on the small index (measured 20
+# for the first batch after the build, 13 for the next): the delta's sketch
+# (hot broadcast + two pins), the first probe's exact occupancy job, the
+# candidate join and the verify, the staged relation's pin and the two
+# staging writes. The staleness verdict is carried, so it runs none.
+INGEST_JOB_BUDGET = 22
+
+
+def test_probe_and_ingest_stays_within_job_budget(spark, tmp_path):
+    from sabd_deduplicator_spark.operators.minhash_index import probe_and_ingest
+
+    idx = build_minhash_index(
+        spark, _docs(spark, _CORPUS), str(tmp_path / "i"), "mh_t_budget", 8
+    )
+    with count_jobs(spark) as first:
+        pairs, novel, _ = probe_and_ingest(spark, idx, _docs(spark, _DELTA, 100))
+    assert pairs.count() > 0 and novel.count() == 1
+    assert first["jobs"] <= INGEST_JOB_BUDGET, f"first ingest: {first} Spark jobs"
+    # a second batch starts from the carried occupancy bound and verdict
+    with count_jobs(spark) as second:
+        probe_and_ingest(
+            spark, idx, _docs(spark, ["yet another unrelated document body"], 200)
+        )
+    assert second["jobs"] <= INGEST_JOB_BUDGET, f"second ingest: {second} Spark jobs"
+    spark.sql("DROP TABLE IF EXISTS mh_t_budget")
+
+
+def test_carried_stats_equal_cold_recompute_over_consecutive_ingests(
+    spark, tmp_path
+):
+    """Three consecutive ingests — a crowded-bucket quarantine, a batch that
+    cools a hot shingle, and a batch sharing one phrase plus a near-dup of
+    stored content — each advancing the CARRIED verdict and occupancy
+    bound, and after each one: the reported verdict equals a cold
+    recompute (memos cleared, carried file removed), the carried
+    occupancy bound is at least the true max band occupancy, and the index
+    equals a from-scratch build over stored ∪ novel under the frozen hot
+    set."""
+    import os
+
+    import sabd_deduplicator_spark.operators.minhash_index as mhi
+    from tests.test_minhash_lease import _crowded_corpus
+
+    crowd_corpus, crowd = _crowded_corpus(spark)
+    # P sits in 46 of the 91 docs (92 > 91: hot at build)
+    p_docs = _docs(
+        spark,
+        [
+            f"zebra quantum waffle stored body number {i} words {i * 3}"
+            for i in range(46)
+        ],
+        1000,
+    )
+    base = crowd_corpus.unionByName(p_docs)
+    idx = build_minhash_index(spark, base, str(tmp_path / "i"), "mh_t_carry", 8)
+    assert idx.hot(spark).filter(F.col("sh") == "zebra quantum").count() == 1
+    batches = [
+        # crowd member (quarantined at cap 12), a plain novel doc, one with P
+        _docs(spark, [crowd[0], "genuinely novel content here",
+                      "zebra quantum waffle plus fresh tail words"], 5000),
+        # 40 docs without P: df(P) stays 47 while n grows past 94 → cooled
+        _docs(
+            spark,
+            [f"cooling filler {i} with its own words {i * 11}" for i in range(40)],
+            6000,
+        ),
+        # every novel doc shares one phrase, plus a copy of a stored doc
+        _docs(
+            spark,
+            [f"shared batch phrase and unique tail {i} {i * 13}" for i in range(6)]
+            + [_CORPUS[4]],
+            7000,
+        ),
+    ]
+    stored = base
+    cooled_seen = False
+    for k, delta in enumerate(batches):
+        pairs, novel, report = mhi.probe_and_ingest(spark, idx, delta, bucket_cap=12)
+        if k == 0:
+            assert report["n_slow_path_docs"] == 1
+        stored = stored.unionByName(
+            delta.join(novel.select("doc_id"), "doc_id", "left_semi")
+        )
+        carry_file = os.path.join(idx.index_dir, mhi._CARRY_FILE)
+        carry = mhi._read_carry(idx, mhi._carry_token(idx))
+        assert {"occupancy", "verdict"} <= set(carry), f"batch {k}: {sorted(carry)}"
+        # cold: no memo, no carried file; the carried state is put back
+        # afterwards so the next batch advances it again
+        with open(carry_file, encoding="utf-8") as fh:
+            saved = fh.read()
+        os.remove(carry_file)
+        mhi._STALENESS_MEMO.clear()
+        mhi._OCC_MEMO.clear()
+        cold = mhi.index_staleness_from_stats(spark, idx)
+        true_max = mhi._max_band_occupancy(spark, idx)
+        with open(carry_file, "w", encoding="utf-8") as fh:
+            fh.write(saved)
+        mhi._STALENESS_MEMO.clear()
+        mhi._OCC_MEMO.clear()
+        assert {key: report[key] for key in cold} == cold, f"batch {k}"
+        cooled_seen |= cold["n_cooled_hot"] > 0
+        assert carry["occupancy"]["bound"] >= true_max, f"batch {k}"
+        ref = build_minhash_index(
+            spark, stored, str(tmp_path / f"ref{k}"), f"mh_t_carry_ref{k}",
+            n_buckets=8, hot=idx.hot(spark),
+        )
+        assert _rows(idx.bands(spark)) == _rows(ref.bands(spark)), f"batch {k}"
+        assert _rows(idx.shingles(spark)) == _rows(ref.shingles(spark)), f"batch {k}"
+        assert _rows(idx.sizes(spark)) == _rows(ref.sizes(spark)), f"batch {k}"
+        spark.sql(f"DROP TABLE IF EXISTS mh_t_carry_ref{k}")
+    assert cooled_seen
+    spark.sql("DROP TABLE IF EXISTS mh_t_carry")

@@ -18,6 +18,9 @@ delta, and measures per factor:
 - APPEND wall + shuffle bytes for a SECOND fixed delta folded into the
   stored index (the crash-atomic staged append) — the maintenance cost,
   which must also be delta-sized as the index grows;
+- Spark JOBS per probe and per append (counted through a job group): at
+  these sizes the per-job fixed cost dominates, so a flat job count is
+  the per-batch cost staying delta-sized;
 - the RECOMPUTE-variant wall (minhash_incremental_delta's shape: sketch
   the stored stratum from scratch every run) — the cost the index
   amortizes away, expected to grow linearly while the probe does not.
@@ -29,6 +32,7 @@ shuffle/sort), recompute linear. Results → PERF.md.
 
 Usage: python tools/index_growth_curve.py [--factors 1 3 10 30]
        [--base 62500] [--delta 6250] [--out /tmp/sabd_idx_growth]
+       [--skip-recompute]
 """
 
 from __future__ import annotations
@@ -66,17 +70,19 @@ def main() -> None:
         probe_minhash_index,
     )
     from sabd_deduplicator_spark.operators.similarity import minhash_bands
+    from sabd_deduplicator_spark.plans.inspect import count_jobs
+    from sabd_deduplicator_spark.session import default_cpus, default_driver_memory
 
     spark = (
         SparkSession.builder.appName("index_growth_curve")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        .master(f"local[{default_cpus()}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
         .config("spark.ui.enabled", "true")  # REST stage metrics
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .getOrCreate()
     )
 
@@ -113,8 +119,9 @@ def main() -> None:
         t0 = time.time()
         sb0 = shuffle_write_bytes(spark)
         pstats: dict = {}
-        pairs = probe_minhash_index(spark, idx, delta, stats=pstats)
-        n_pairs = pairs.count()
+        with count_jobs(spark) as probe_jobs:
+            pairs = probe_minhash_index(spark, idx, delta, stats=pstats)
+            n_pairs = pairs.count()
         probe_s = time.time() - t0
         probe_sb = shuffle_write_bytes(spark) - sb0
         n_over = pstats.get("n_oversized_buckets", 0)
@@ -130,7 +137,8 @@ def main() -> None:
         )
         t0 = time.time()
         sb0 = shuffle_write_bytes(spark)
-        append_to_minhash_index(spark, idx, delta2)
+        with count_jobs(spark) as append_jobs:
+            append_to_minhash_index(spark, idx, delta2)
         append_s = time.time() - t0
         append_sb = shuffle_write_bytes(spark) - sb0
 
@@ -163,23 +171,26 @@ def main() -> None:
             cand.write.format("noop").mode("overwrite").save()
             recompute_s = time.time() - t0
 
-        rows.append((f, args.base * f, build_s, probe_s, probe_sb, n_pairs,
-                     n_over, append_s, append_sb, recompute_s))
+        rows.append((f, args.base * f, build_s, probe_s, probe_jobs["jobs"],
+                     probe_sb, n_pairs, n_over, append_s, append_jobs["jobs"],
+                     append_sb, recompute_s))
         rc = f"{recompute_s:.1f}" if recompute_s is not None else "-"
         print(
             f"x{f}: build={build_s:.1f}s probe={probe_s:.1f}s "
+            f"probe_jobs={probe_jobs['jobs']} "
             f"probe_shuffle={probe_sb/1e6:.1f}MB pairs={n_pairs} "
             f"skipped_buckets={n_over} "
-            f"append={append_s:.1f}s append_shuffle={append_sb/1e6:.1f}MB "
+            f"append={append_s:.1f}s append_jobs={append_jobs['jobs']} "
+            f"append_shuffle={append_sb/1e6:.1f}MB "
             f"recompute_candidates={rc}s"
         )
         spark.sql(f"DROP TABLE IF EXISTS mh_growth_x{f}")
 
-    print("\n| factor | corpus_docs | build_s | probe_s | probe_shuffle_MB | pairs | skipped_buckets | append_s | append_shuffle_MB | recompute_cand_s |")
-    print("|---|---|---|---|---|---|---|---|---|---|")
-    for f, n, b, p, sb, np_, nov, ap, asb, rc in rows:
+    print("\n| factor | corpus_docs | build_s | probe_s | probe_jobs | probe_shuffle_MB | pairs | skipped_buckets | append_s | append_jobs | append_shuffle_MB | recompute_cand_s |")
+    print("|---|---|---|---|---|---|---|---|---|---|---|---|")
+    for f, n, b, p, pj, sb, np_, nov, ap, aj, asb, rc in rows:
         rcs = f"{rc:.1f}" if rc is not None else "-"
-        print(f"| {f}x | {n} | {b:.1f} | {p:.1f} | {sb/1e6:.1f} | {np_} | {nov} | {ap:.1f} | {asb/1e6:.1f} | {rcs} |")
+        print(f"| {f}x | {n} | {b:.1f} | {p:.1f} | {pj} | {sb/1e6:.1f} | {np_} | {nov} | {ap:.1f} | {aj} | {asb/1e6:.1f} | {rcs} |")
 
 
 if __name__ == "__main__":
