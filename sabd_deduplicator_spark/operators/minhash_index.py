@@ -85,7 +85,7 @@ Round-11 production posture:
 - The nightly verdict reads STATS, not the corpus: per-shingle df
   contributions accumulate in ``df_stats/`` (build exact, appends
   delta-sized, compaction re-derives) so the newly-hot term is a
-  vocabulary-sized sum, and the verdict memoizes per index state.
+  vocabulary-sized sum, and the verdict is carried with the index (below).
 - Probe crowded-bucket SKIPS feed back: the per-ingest skip counts
   persist in ``probe_stats/`` and are themselves a rebuild signal
   (crowding IS staleness), and delta docs whose EVERY shared band was
@@ -462,7 +462,7 @@ def build_minhash_index(
     rebuild-equivalence test (and any staged rebuild that must preserve an
     existing cap) can inject it; production builds leave it None.
     ``bands_path`` override: rebuild_minhash_index stages its band table
-    OUTSIDE the dot-prefixed staging root (a catalog RENAME does not move
+    OUTSIDE the dot-prefixed staging root (the catalog swap does not move
     files, so the staged bands must already sit at their final location).
     """
     from sabd_deduplicator_spark.operators.similarity import (
@@ -548,22 +548,6 @@ def build_minhash_index(
     return idx
 
 
-def delta_band_shingles(
-    spark: SparkSession, idx: MinHashIndex, delta_docs: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(capped delta shingles, their band keys) under the index's FROZEN hot
-    set — the shared front half of probe and append."""
-    from sabd_deduplicator_spark.operators.similarity import (
-        minhash_bands,
-        shingles_of,
-    )
-
-    shd = shingles_of(delta_docs).join(
-        broadcast(idx.hot(spark).select("sh")), "sh", "left_anti"
-    )
-    return shd, minhash_bands(shd)
-
-
 @dataclass(frozen=True)
 class _DeltaSketch:
     """A batch's sketch under the index's frozen hot set, pinned once so
@@ -629,85 +613,35 @@ def _sketch_delta(
 PROBE_BUCKET_CAP = 64
 PROBE_BROADCAST_MAX_CANDIDATES = 4_000_000  # broadcast guard (judge r9 advice)
 
-_OCC_MEMO: dict = {}
-
-
-def _index_state_token(idx: MinHashIndex, components: tuple[str, ...]) -> str:
-    """Filesystem staleness token over the named component glob patterns
-    (relative to index_dir): the sorted (relpath, size) listing, hashed.
-    Pure filesystem check — no Spark job, no catalog DESCRIBE. Every band
-    location the module ever creates lives under index_dir and matches
-    ``bands*`` (build-time ``bands/``, compaction's ``bands_compact_*``,
-    rebuild's ``bands_rebuild_*``), so a ``bands*`` pattern keys directly
-    on the physical band files wherever the catalog currently points."""
-    import glob
-
-    parts = []
-    for pat in components:
-        for f in sorted(
-            glob.glob(os.path.join(idx.index_dir, pat, "*.parquet"))
-        ):
-            parts.append(
-                f"{os.path.relpath(f, idx.index_dir)}:{os.path.getsize(f)}"
-            )
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
-
-
-def _max_band_occupancy(spark: SparkSession, idx: MinHashIndex) -> int:
-    """Memoized GLOBAL max band-key occupancy of the stored index — the
-    stat that decides whether a probe needs the crowded-bucket census at
-    all (global max ≤ cap ⇒ no delta can match an over-cap bucket).
-    Keyed DIRECTLY on the physical band-file listing plus sizes/ (judge
-    r10 advice: the old sizes-only key relied on the convention that every
-    band-mutating op also rewrites sizes — now any op that touches band
-    files invalidates the memo by construction; staged ``bands_rebuild_*``
-    / ``bands_compact_*`` files entering the listing cause at worst a
-    spurious recompute, the safe direction). Tombstone files are excluded
-    on purpose: a forget only ever LOWERS live occupancy, and the raw-
-    bands max (tombstones not subtracted) is an upper bound of live
-    occupancy — the census is only ever SKIPPED when even the bound fits
-    under the cap. One aggregate per index STATE, amortized across every
-    probe between maintenance ops (the staleness monitor's cost class)
-    instead of a census scan per probe — an always-on census cost the
-    registered probe a measured ~2× wall at sf0.1 for zero skips, and
-    even resolving the band location per probe is a DESCRIBE TABLE job
-    this path must not pay.
-
-    Behind the in-process memo sits the index's carried state: an EXACT
-    bound carried under the current state token is reused by any process;
-    otherwise one job recomputes it (the bucketed scan aggregates per key
-    without an exchange, the top-1 merges on the driver) and carries it."""
-    token = _index_state_token(idx, ("bands*", "sizes"))
-    key = (spark.sparkContext.applicationId, idx.table_name, token)
-    if key not in _OCC_MEMO:
-        evict_dead_app_entries(_OCC_MEMO, key[0])
-        carry_token = _carry_token(idx)
-        occ = _read_carry(idx, carry_token).get("occupancy")
-        if occ is None or not occ["exact"]:
-            top = (
-                idx.bands(spark)
-                .groupBy(*BAND_KEY)
-                .agg(F.count("*").alias("c"))
-                .orderBy(F.desc("c"))
-                .first()
-            )
-            occ = {"bound": int(top["c"]) if top else 0, "exact": True}
-            _write_carry(idx, carry_token, occupancy=occ)
-        _OCC_MEMO[key] = occ["bound"]
-    return _OCC_MEMO[key]
-
-
 def _occupancy_bound(spark: SparkSession, idx: MinHashIndex, cap: int) -> int:
-    """An upper bound of the max band-key occupancy, as cheap as it can be
-    while still deciding ``bound > cap``: the carried bound (exact or the
-    appends' running upper bound) when it fits under the cap, else the
-    exact max (:func:`_max_band_occupancy`) — so a loose bound that has
-    drifted over the cap is re-tightened once instead of sending every
-    later probe through the census."""
-    occ = _read_carry(idx, _carry_token(idx)).get("occupancy")
-    if occ is not None and occ["bound"] <= cap:
-        return occ["bound"]
-    return _max_band_occupancy(spark, idx)
+    """An upper bound of the GLOBAL max band-key occupancy of the stored
+    index — the stat that decides whether a probe needs the crowded-bucket
+    census at all (bound ≤ cap ⇒ no delta can match an over-cap bucket).
+
+    The carried bound (exact, or the appends' running upper bound) is used
+    when it is exact or fits under the cap. Otherwise one job recomputes the
+    exact max (the bucketed scan aggregates per key without an exchange, the
+    top-1 merges on the driver) and carries it, so a loose bound that has
+    drifted over the cap is re-tightened once instead of sending every later
+    probe through the census. One aggregate per index STATE, in any process
+    (the staleness monitor's cost class), instead of a census scan per
+    probe — an always-on census cost the registered probe a measured ~2×
+    wall at sf0.1 for zero skips. Tombstones are not subtracted on purpose:
+    a forget only ever LOWERS live occupancy, so the raw-bands max bounds
+    it and the census is only ever SKIPPED when even the bound fits."""
+    token = _carry_token(idx)
+    occ = _read_carry(idx, token).get("occupancy")
+    if occ is None or not (occ["exact"] or occ["bound"] <= cap):
+        top = (
+            idx.bands(spark)
+            .groupBy(*BAND_KEY)
+            .agg(F.count("*").alias("c"))
+            .orderBy(F.desc("c"))
+            .first()
+        )
+        occ = {"bound": int(top["c"]) if top else 0, "exact": True}
+        _write_carry(idx, token, occupancy=occ)
+    return occ["bound"]
 
 
 # --- carried index stats -----------------------------------------------------
@@ -730,7 +664,25 @@ _CARRY_COMPONENTS = (
 
 
 def _carry_token(idx: MinHashIndex) -> str:
-    return _index_state_token(idx, _CARRY_COMPONENTS)
+    """The index state token: the sorted (relpath, size) listing of every
+    carried component's parquet files, hashed. Pure filesystem check — no
+    Spark job, no catalog DESCRIBE. Every band location the module ever
+    creates lives under index_dir and matches ``bands*`` (build-time
+    ``bands/``, compaction's ``bands_compact_*``, rebuild's
+    ``bands_rebuild_*``), so the token keys directly on the physical band
+    files wherever the catalog currently points; staged band files entering
+    the listing cause at worst a spurious recompute, the safe direction."""
+    import glob
+
+    parts = []
+    for pat in _CARRY_COMPONENTS:
+        for f in sorted(
+            glob.glob(os.path.join(idx.index_dir, pat, "*.parquet"))
+        ):
+            parts.append(
+                f"{os.path.relpath(f, idx.index_dir)}:{os.path.getsize(f)}"
+            )
+    return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
 def _read_carry(idx: MinHashIndex, token: str) -> dict:
@@ -801,8 +753,10 @@ def probe_minhash_index(
     stays exchange-free; with no tombstones the plan is byte-identical to
     the pre-deletion one (filesystem check, no Spark job).
 
-    ``_sketch`` (private): the pinned sketch of ``delta_docs``, computed
-    once by :func:`probe_and_ingest` and shared with its append."""
+    The delta is sketched once under the index's frozen hot set and pinned
+    (:func:`_sketch_delta`), as the append does. ``_sketch`` (private): that
+    pinned sketch when the caller already holds it — :func:`probe_and_ingest`
+    computes it once and shares it with its slow path and its append."""
     # roll forward any committed-but-unpublished append first (cheap glob;
     # roll_back stays False — an uncommitted staging may be a concurrent
     # append in flight and is invisible to this read anyway). Roll-forward
@@ -832,10 +786,8 @@ def probe_minhash_index(
         bands_e = bands_e.join(tomb, "doc_id", "left_anti")
         she = she.join(tomb, "doc_id", "left_anti")
         sizes_e = sizes_e.join(tomb, "doc_id", "left_anti")
-    if _sketch is None:
-        shd, bands_d = delta_band_shingles(spark, idx, delta_docs)
-    else:
-        shd, bands_d = _sketch.capped, _sketch.bands
+    sketch = _sketch or _sketch_delta(spark, idx, delta_docs)
+    shd, bands_d = sketch.capped, sketch.bands
     if (
         bucket_cap is not None
         and _occupancy_bound(spark, idx, bucket_cap) > bucket_cap
@@ -910,8 +862,8 @@ def probe_minhash_index(
             broadcast(oversized.select(*BAND_KEY)), BAND_KEY, "left_anti"
         )
     elif bucket_cap is not None and stats is not None:
-        # the carried/memoized index-state bound proves no bucket can
-        # exceed the cap — the census is skipped and there is nothing to skip
+        # the carried index-state bound proves no bucket can exceed the
+        # cap — the census is skipped and there is nothing to skip
         stats["n_oversized_buckets"] = 0
         stats["bucket_cap"] = bucket_cap
     # materialized (localCheckpoint, eager): the candidate set is
@@ -992,13 +944,44 @@ _REBUILD_MARKER = "_commit_rebuild_"  # existence == the rebuild is committed
 _RETIRED = ".retired_"              # old component parked mid-swap (hidden)
 
 
-def _band_table_location(spark: SparkSession, idx: MinHashIndex) -> str:
-    """Resolve the band table's CURRENT data directory from the catalog —
-    after a compaction it is no longer the build-time bands/ directory.
-    The JSON form of the command is one row, so reading it runs no Spark
-    job (a DataFrame filter over the row-per-field form does)."""
-    desc = spark.sql(f"DESCRIBE TABLE EXTENDED {idx.table_name} AS JSON").first()
+def _table_location(spark: SparkSession, table_name: str) -> str:
+    """Resolve a band table's CURRENT data directory from the catalog —
+    after a compaction or rebuild the live table's is no longer the
+    build-time bands/ directory. The JSON form of the command is one row,
+    so reading it runs no Spark job (a DataFrame filter over the
+    row-per-field form does)."""
+    desc = spark.sql(f"DESCRIBE TABLE EXTENDED {table_name} AS JSON").first()
     return json.loads(desc[0])["location"].removeprefix("file:")
+
+
+def _swap_band_table(
+    spark: SparkSession,
+    idx: MinHashIndex,
+    staged_tbl: str,
+    _crash: str | None = None,
+) -> None:
+    """Make the staged band table the live one with ONE catalog mutation,
+    not DROP+RENAME: the live table is repointed at the
+    staged table's files with a single ALTER ... SET LOCATION, so a
+    concurrent reader resolves either the old or the new location — never a
+    missing table between a DROP and a RENAME. The staged table is then
+    dropped (external: its files, now the live location, survive); a
+    re-entry after a crash in between repeats the idempotent SET LOCATION
+    and finishes the drop. The old location's files are the caller's to
+    delete, after this returns."""
+    if spark.catalog.tableExists(idx.table_name):
+        spark.sql(
+            f"ALTER TABLE {idx.table_name} SET LOCATION "
+            f"'{_table_location(spark, staged_tbl)}'"
+        )
+        if _crash == "post_set_location":
+            raise InjectedCrash("post_set_location")
+        spark.sql(f"DROP TABLE {staged_tbl}")
+    else:
+        # live table missing (a crash in a pre-SET-LOCATION protocol
+        # version, or external deletion): adopt the staged table
+        spark.sql(f"ALTER TABLE {staged_tbl} RENAME TO {idx.table_name}")
+    spark.catalog.refreshTable(idx.table_name)
 
 
 def _move_parquet_files(
@@ -1038,25 +1021,17 @@ def _publish_append(
     moved: list | None = None,
 ) -> None:
     """Roll a COMMITTED append batch forward: drain each staged component
-    into its live directory. Safe to re-run from any interruption point."""
-    _move_parquet_files(
-        os.path.join(staging, "shingles"), idx.shingles_path, moved
-    )
-    if _crash == "mid_publish":
-        raise InjectedCrash("mid_publish")
-    _move_parquet_files(os.path.join(staging, "sizes"), idx.sizes_path, moved)
-    _move_parquet_files(
-        os.path.join(staging, "hot_delta"), idx.hot_delta_path, moved
-    )
-    _move_parquet_files(
-        os.path.join(staging, "df_stats"), idx.df_stats_path, moved
-    )
-    _move_parquet_files(
-        os.path.join(staging, "probe_stats"), idx.probe_stats_path, moved
-    )
-    _move_parquet_files(
-        os.path.join(staging, "bands"), _band_table_location(spark, idx), moved
-    )
+    into its live directory (the bands into the band table's current
+    location). Safe to re-run from any interruption point."""
+    for comp in (*_SEGMENT_COMPONENTS, "bands"):
+        live = (
+            _table_location(spark, idx.table_name)
+            if comp == "bands"
+            else os.path.join(idx.index_dir, comp)
+        )
+        _move_parquet_files(os.path.join(staging, comp), live, moved)
+        if _crash == "mid_publish" and comp == "shingles":
+            raise InjectedCrash("mid_publish")
     # a rename does not invalidate Spark's cached file listing for the
     # table (saveAsTable-append did); refresh so readers see the new files
     spark.catalog.refreshTable(idx.table_name)
@@ -1076,14 +1051,10 @@ def _publish_rebuild(
       (live → ``.retired_<batch>_<comp>``, staged → live); on re-entry a
       missing staged dir means that component already swapped, a surviving
       retired dir is just cleanup;
-    - the band table swaps via ONE catalog mutation — the live table is
-      repointed at the staged files with ALTER TABLE SET LOCATION, then
-      the staged sibling table is dropped (external tables: the old files
-      survive at ``manifest["old_band_location"]`` and are deleted only
-      after the swap landed); a re-entry between the two statements
-      repeats the idempotent repoint and finishes the drop, and a
-      re-entry where the staging table no longer exists means the swap
-      already happened;
+    - the band table swaps via :func:`_swap_band_table` (external tables:
+      the old files survive at ``manifest["old_band_location"]`` and are
+      deleted only after the swap landed); a re-entry where the staging
+      table no longer exists means the swap already happened;
     - the SNAPSHOTTED tombstone files (``manifest["tomb_files"]``) are
       spent — the rebuilt components never contained those docs — and are
       removed; tombstones appended mid-rebuild are NOT touched (they were
@@ -1121,34 +1092,10 @@ def _publish_rebuild(
         shutil.rmtree(idx.probe_stats_path, ignore_errors=True)
     staging_tbl = f"{idx.table_name}__rebuild_{batch}"
     if spark.catalog.tableExists(staging_tbl):
-        if spark.catalog.tableExists(idx.table_name):
-            # ONE catalog mutation, not DROP+RENAME (judge r10 advice): the
-            # live table is repointed at the staged band files with a
-            # single ALTER ... SET LOCATION, so a concurrent reader
-            # resolves either the old or the new location — never a
-            # missing table between a DROP and a RENAME. The staged
-            # sibling table is then dropped (external: its files, now the
-            # live location, survive); re-entry after a crash in between
-            # repeats the idempotent SET LOCATION and finishes the drop.
-            staged_loc = (
-                spark.sql(f"DESCRIBE TABLE EXTENDED {staging_tbl}")
-                .filter(F.col("col_name") == "Location")
-                .first()["data_type"]
-            )
-            spark.sql(
-                f"ALTER TABLE {idx.table_name} SET LOCATION '{staged_loc}'"
-            )
-            if _crash == "post_set_location":
-                raise InjectedCrash("post_set_location")
-            spark.sql(f"DROP TABLE {staging_tbl}")
-        else:
-            # live table missing (a crash in a pre-SET-LOCATION protocol
-            # version, or external deletion): adopt the staging table
-            spark.sql(f"ALTER TABLE {staging_tbl} RENAME TO {idx.table_name}")
-    spark.catalog.refreshTable(idx.table_name)
+        _swap_band_table(spark, idx, staging_tbl, _crash)
     old_loc = manifest.get("old_band_location")
     if old_loc and os.path.isdir(old_loc):
-        new_loc = _band_table_location(spark, idx)
+        new_loc = _table_location(spark, idx.table_name)
         if os.path.realpath(old_loc) != os.path.realpath(new_loc):
             shutil.rmtree(old_loc, ignore_errors=True)  # ... deleted HERE
     for f in manifest.get("tomb_files", []):
@@ -1910,9 +1857,6 @@ def minhash_index_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STALENESS_MEMO: dict = {}
-
-
 def index_staleness_from_stats(spark: SparkSession, idx: MinHashIndex) -> dict:
     """The staleness verdict computed from the index's OWN stored stats —
     no corpus text touched — so the nightly ingest can log it every run
@@ -1956,41 +1900,34 @@ def index_staleness_from_stats(spark: SparkSession, idx: MinHashIndex) -> dict:
     stores no rows anywhere and is invisible to the whole index, probes
     included, so excluding it from the denominator is self-consistent.
 
-    Cost, MEMOIZED per index state (the state token is the stats
-    components' file listing — the _max_band_occupancy device) and, behind
-    the memo, CARRIED in the index directory: an append that found carried
-    inputs advances them from its batch's own stats (_advance_carry), so
-    the nightly post-append verdict reads one small file, in any process.
-    Without carried inputs the recompute is one stats-sized query — one
-    aggregate and one ordered top-K fetch, two Spark jobs — never a
-    corpus-sized pass; see :func:`_verdict_inputs`."""
-    token = _index_state_token(
-        idx,
-        ("sizes", "df_stats", "hot", "hot_delta", "tombstones", "probe_stats"),
-    )
-    key = (spark.sparkContext.applicationId, idx.table_name, token)
-    if key in _STALENESS_MEMO:
-        return dict(_STALENESS_MEMO[key])
-    evict_dead_app_entries(_STALENESS_MEMO, key[0])
-    carry_token = _carry_token(idx)
-    inputs = _read_carry(idx, carry_token).get("verdict")
+    Cost: the inputs are CARRIED in the index directory, keyed by the
+    index state token — the build observes them during its own writes, and
+    an append that found carried inputs advances them from its batch's own
+    stats (_advance_carry) — so a verdict on an unchanged or appended-to
+    index reads one small file and runs no Spark job, in any process. Only
+    when the carried inputs are missing (after a forget, compact or
+    rebuild, or a crash before the carry was written) does one stats-sized
+    query recompute them — one aggregate and one ordered top-K fetch, two
+    Spark jobs, never a corpus-sized pass; see :func:`_verdict_inputs` —
+    and carry the result. On a read-only mount the carry cannot be
+    written, so every such verdict recomputes."""
+    token = _carry_token(idx)
+    inputs = _read_carry(idx, token).get("verdict")
     if inputs is None:
         inputs = _verdict_inputs(spark, idx)
         max_doc_id = inputs.pop("max_doc_id")
-        _write_carry(idx, carry_token, verdict=inputs, max_doc_id=max_doc_id)
+        _write_carry(idx, token, verdict=inputs, max_doc_id=max_doc_id)
     n = inputs["n_docs"]
     n_cooled = sum(2 * df <= n for df in inputs["hot_df"].values())
     n_newly_hot = len(inputs["newly_hot_df"])
     n_skips = inputs["n_skips"]
-    report = {
+    return {
         "n_docs": n,
         "n_cooled_hot": n_cooled,
         "n_newly_hot": n_newly_hot,
         "n_oversized_probe_buckets": n_skips,
         "rebuild_recommended": (n_cooled + n_newly_hot + n_skips) > 0,
     }
-    _STALENESS_MEMO[key] = dict(report)
-    return report
 
 
 _VERDICT_TOP_ROWS = 4096
@@ -2134,11 +2071,13 @@ def compact_minhash_index(spark: SparkSession, idx: MinHashIndex) -> dict:
     metadata plus per-file bucket suffixes, not the data), so the band
     table is rewritten THROUGH THE SAME bucketed writer — one shuffle of
     the index into exactly n_buckets files — staged as a sibling table,
-    row-verified BEFORE the swap, then swapped by a catalog DROP + RENAME
-    (the instant between them is the same single-writer maintenance window
-    compact_parquet documents; a crash before the DROP leaves the live
-    table untouched). Shingle/size components are plain directories and
-    reuse compact_parquet's stage-verify-swap as-is.
+    row-verified BEFORE the swap, then swapped like the rebuild's band
+    table (:func:`_swap_band_table`): ONE catalog mutation repoints the
+    live table at the staged files, then the staged table is dropped, so
+    the live table resolves at every instant — to the old files until the
+    repoint, to the compacted ones after — and the old files are deleted
+    only once the swap landed. Shingle/size components are plain
+    directories and reuse compact_parquet's stage-verify-swap as-is.
 
     Returns {"files_before": int, "files_after": int} for the band table.
 
@@ -2161,7 +2100,7 @@ def _compact_under_lease(
 
     def _band_files() -> list[str]:
         return glob.glob(
-            os.path.join(_band_table_location(spark, idx), "*.parquet")
+            os.path.join(_table_location(spark, idx.table_name), "*.parquet")
         )
 
     # complete any committed append and discard any orphaned staging before
@@ -2169,7 +2108,7 @@ def _compact_under_lease(
     # staging, so roll_back is safe here) — otherwise staged band files
     # could publish into the OLD location after the swap below retires it
     recover_minhash_index(spark, idx, roll_back=True, _owns_lease=True)
-    live_location = _band_table_location(spark, idx)
+    live_location = _table_location(spark, idx.table_name)
     before = _band_files()
     live_rows = idx.bands(spark).count()
     staging_name = idx.table_name + "__compact"
@@ -2224,9 +2163,8 @@ def _compact_under_lease(
         )
     lease.heartbeat()  # the band rewrite (the long stage) is done
     lease.check()  # fencing: a taken-over writer must never swap
-    spark.sql(f"DROP TABLE {idx.table_name}")  # external: files survive ...
-    spark.sql(f"ALTER TABLE {staging_name} RENAME TO {idx.table_name}")
-    for f in before:  # ... and are deleted here, after the swap landed
+    _swap_band_table(spark, idx, staging_name)
+    for f in before:  # the old files are deleted only after the swap landed
         try:
             os.remove(f)
         except OSError:
@@ -2298,15 +2236,15 @@ def rebuild_minhash_index(
     2. STAGE a complete fresh build: hot/shingles/sizes under the hidden
        ``.rebuild_<batch>/`` root (invisible to every reader), the band
        table as catalog table ``<name>__rebuild_<batch>`` whose files land
-       at ``bands_rebuild_<batch>/`` (their FINAL location — a catalog
-       RENAME moves no files). Verified before the commit point:
+       at ``bands_rebuild_<batch>/`` (their FINAL location — the catalog
+       swap moves no files). Verified before the commit point:
        band rows == sized docs × bands-per-doc, else abort with the live
        index untouched.
     3. COMMIT by creating ``_commit_rebuild_<batch>`` — one atomic file
        creation whose JSON body is the publish manifest (tombstone
        snapshot, old band location).
     4. PUBLISH via :func:`_publish_rebuild` — idempotent component swaps +
-       catalog DROP/RENAME — then remove the marker LAST. A crash anywhere
+       the band-table swap (:func:`_swap_band_table`) — then remove the marker LAST. A crash anywhere
        re-enters roll-forward via recover_minhash_index (probe and every
        writer run it first), exactly the append's recovery path.
 
@@ -2321,8 +2259,8 @@ def rebuild_minhash_index(
     CONCURRENCY: runs under the single-writer maintenance lease
     (:func:`writer_lease`) — writers serialize, and the fencing check
     before the commit rename means a stalled, taken-over rebuild can never
-    commit. The PUBLISH window (step 4's component swaps + catalog
-    DROP/RENAME) is additionally NOT reader-atomic, unlike the append's
+    commit. The PUBLISH window (step 4's component and band-table swaps)
+    is additionally NOT reader-atomic, unlike the append's
     purely-additive publish: a probe whose component reads race the swap
     can observe a mixed old/new set (judge r10 advice). Probes therefore
     never perform this publish without holding the lease themselves
@@ -2364,7 +2302,7 @@ def _rebuild_under_lease(
     staging = os.path.join(idx.index_dir, _REBUILD_STAGING + batch)
     staging_tbl = f"{idx.table_name}__rebuild_{batch}"
     bands_path = os.path.join(idx.index_dir, f"bands_rebuild_{batch}")
-    old_band_location = _band_table_location(spark, idx)
+    old_band_location = _table_location(spark, idx.table_name)
     staged = build_minhash_index(
         spark,
         docs,

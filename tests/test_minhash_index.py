@@ -17,9 +17,9 @@ from pyspark.sql import functions as F
 
 from sabd_deduplicator_spark.operators.minhash_index import (
     BAND_KEY,
+    _sketch_delta,
     append_to_minhash_index,
     build_minhash_index,
-    delta_band_shingles,
     probe_minhash_index,
 )
 from sabd_deduplicator_spark.plans.inspect import count_exchanges, count_jobs
@@ -67,7 +67,7 @@ def test_probe_join_reads_index_buckets_shuffle_free(no_broadcast, tmp_path):
     idx = build_minhash_index(
         spark, _docs(spark, _CORPUS), str(tmp_path / "idx"), "mh_t_gate", n_buckets=8
     )
-    _, bands_d = delta_band_shingles(spark, idx, _docs(spark, _DELTA, 100))
+    bands_d = _sketch_delta(spark, idx, _docs(spark, _DELTA, 100)).bands
     bands_path = str(tmp_path / "delta_bands")
     bands_d.write.parquet(bands_path)
 
@@ -175,7 +175,7 @@ def test_compaction_preserves_rows_and_bucket_layout(no_broadcast, tmp_path):
     assert sorted(map(tuple, idx.hot_delta(spark).collect())) == hd_before
 
     # the probe join is still bucket-aligned after the catalog swap
-    _, bands_d = delta_band_shingles(spark, idx, _docs(spark, _DELTA, 300))
+    bands_d = _sketch_delta(spark, idx, _docs(spark, _DELTA, 300)).bands
     p = str(tmp_path / "probe_bands")
     bands_d.write.parquet(p)
     assert count_exchanges(_probe_fragment(spark, idx, p)) == 1
@@ -185,6 +185,63 @@ def test_compaction_preserves_rows_and_bucket_layout(no_broadcast, tmp_path):
     assert stats2["files_after"] <= idx.n_buckets
     assert sorted(map(tuple, idx.bands(spark).collect())) == before_rows
     spark.sql("DROP TABLE IF EXISTS mh_t_cpt")
+
+
+def test_compaction_swap_never_leaves_band_table_missing(
+    spark, tmp_path, monkeypatch
+):
+    """The compaction's band-table swap is ONE catalog mutation: when the
+    catalog statement that follows it fails, the live table still resolves
+    and probes answer as before the compaction, the writer lease is
+    released, and a second compaction succeeds."""
+    import os
+    import re
+
+    import sabd_deduplicator_spark.operators.minhash_index as mhi
+    from sabd_deduplicator_spark.operators.minhash_index import (
+        compact_minhash_index,
+    )
+
+    name = "mh_t_cswap"
+    idx = build_minhash_index(
+        spark, _docs(spark, _CORPUS), str(tmp_path / "i"), name, n_buckets=8
+    )
+    append_to_minhash_index(spark, idx, _docs(spark, _DELTA, 100))
+    probe_batch = _docs(spark, [_DELTA[0]], 300)
+    before_rows = _rows(idx.bands(spark))
+    before_pairs = _rows(probe_minhash_index(spark, idx, probe_batch))
+    assert before_pairs
+
+    # the swap's first mutation is a DROP or ALTER of the live table itself;
+    # the next DROP/ALTER statement after it fails
+    first_mutation = re.compile(rf"(DROP|ALTER) TABLE {name}\b")
+    real_sql = spark.sql
+    armed = []
+
+    def failing_sql(statement, *args, **kwargs):
+        if armed and re.match(r"(DROP|ALTER) TABLE", statement):
+            raise RuntimeError("catalog unavailable mid-swap")
+        if first_mutation.match(statement):
+            armed.append(statement)
+        return real_sql(statement, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", failing_sql)
+    with pytest.raises(RuntimeError, match="mid-swap"):
+        compact_minhash_index(spark, idx)
+    monkeypatch.undo()
+    assert armed
+
+    assert spark.catalog.tableExists(name)
+    assert _rows(idx.bands(spark)) == before_rows
+    assert _rows(probe_minhash_index(spark, idx, probe_batch)) == before_pairs
+    assert not os.path.exists(os.path.join(idx.index_dir, mhi._LEASE_FILE))
+
+    stats = compact_minhash_index(spark, idx)
+    assert stats["files_after"] <= idx.n_buckets
+    assert _rows(idx.bands(spark)) == before_rows
+    assert _rows(probe_minhash_index(spark, idx, probe_batch)) == before_pairs
+    for t in (name, name + "__compact"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_probe_and_ingest_appends_only_novel(spark, tmp_path):
@@ -266,7 +323,7 @@ def test_forget_filters_probe_and_compaction_applies_dv(no_broadcast, tmp_path):
     # (this fragment includes the anti-join, unlike _probe_fragment)
     from pyspark.sql.functions import broadcast as _bc
 
-    _, bands_t = delta_band_shingles(spark, idx, delta)
+    bands_t = _sketch_delta(spark, idx, delta).bands
     pt = str(tmp_path / "probe_bands_tomb")
     bands_t.write.parquet(pt)
     d_t = spark.read.parquet(pt)
@@ -287,7 +344,7 @@ def test_forget_filters_probe_and_compaction_applies_dv(no_broadcast, tmp_path):
     # answers unchanged, bucket-aligned join preserved
     assert sorted(map(tuple, probe_minhash_index(spark, idx, delta).collect())) \
         == sorted(map(tuple, want))
-    _, bands_d = delta_band_shingles(spark, idx, delta)
+    bands_d = _sketch_delta(spark, idx, delta).bands
     p = str(tmp_path / "probe_bands_fgt")
     bands_d.write.parquet(p)
     assert count_exchanges(_probe_fragment(spark, idx, p)) == 1
@@ -423,7 +480,7 @@ def test_rebuild_equals_fresh_build_and_refreezes_cap(no_broadcast, tmp_path):
     )
     assert probe_minhash_index(spark, idx, probe_batch).count() > 0
     # the swapped-in band table still joins bucket-aligned
-    _, bands_d = delta_band_shingles(spark, idx, probe_batch)
+    bands_d = _sketch_delta(spark, idx, probe_batch).bands
     p = str(tmp_path / "probe_bands_rb")
     bands_d.write.parquet(p)
     assert count_exchanges(_probe_fragment(spark, idx, p)) == 1
@@ -847,7 +904,7 @@ def test_carried_stats_equal_cold_recompute_over_consecutive_ingests(
     cools a hot shingle, and a batch sharing one phrase plus a near-dup of
     stored content — each advancing the CARRIED verdict and occupancy
     bound, and after each one: the reported verdict equals a cold
-    recompute (memos cleared, carried file removed), the carried
+    recompute (carried file removed), the carried
     occupancy bound is at least the true max band occupancy, and the index
     equals a from-scratch build over stored ∪ novel under the frozen hot
     set."""
@@ -899,19 +956,15 @@ def test_carried_stats_equal_cold_recompute_over_consecutive_ingests(
         carry_file = os.path.join(idx.index_dir, mhi._CARRY_FILE)
         carry = mhi._read_carry(idx, mhi._carry_token(idx))
         assert {"occupancy", "verdict"} <= set(carry), f"batch {k}: {sorted(carry)}"
-        # cold: no memo, no carried file; the carried state is put back
+        # cold: no carried file; the carried state is put back
         # afterwards so the next batch advances it again
         with open(carry_file, encoding="utf-8") as fh:
             saved = fh.read()
         os.remove(carry_file)
-        mhi._STALENESS_MEMO.clear()
-        mhi._OCC_MEMO.clear()
         cold = mhi.index_staleness_from_stats(spark, idx)
-        true_max = mhi._max_band_occupancy(spark, idx)
+        true_max = mhi._occupancy_bound(spark, idx, 0)  # no carried bound: exact
         with open(carry_file, "w", encoding="utf-8") as fh:
             fh.write(saved)
-        mhi._STALENESS_MEMO.clear()
-        mhi._OCC_MEMO.clear()
         assert {key: report[key] for key in cold} == cold, f"batch {k}"
         cooled_seen |= cold["n_cooled_hot"] > 0
         assert carry["occupancy"]["bound"] >= true_max, f"batch {k}"

@@ -52,15 +52,16 @@ def main() -> None:
         BPE_TRAIN_BOUND,
         _learn_bpe_rounds,
     )
+    from sabd_deduplicator_spark.session import default_cpus, default_driver_memory
 
     spark = (
         SparkSession.builder.appName("bpe_train_curve")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        .master(f"local[{default_cpus()}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .getOrCreate()
     )
 

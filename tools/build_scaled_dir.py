@@ -105,16 +105,17 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from sabd_deduplicator_spark.session import default_cpus, default_driver_memory
     from tools.scale_curve import build_corpus, build_embeddings
 
     spark = (
         SparkSession.builder.appName("build_scaled_dir")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        .master(f"local[{default_cpus()}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -67,18 +67,19 @@ def main() -> None:
         merge_hash_links,
         merge_hash_links_onto_index,
     )
+    from sabd_deduplicator_spark.session import default_cpus, default_driver_memory
     from sabd_deduplicator_spark.sources.writers import save_bucketed_table
 
     n_buckets = 32
     spark = (
         SparkSession.builder.appName("hash_index_growth_curve")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        .master(f"local[{default_cpus()}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
         .config("spark.ui.enabled", "true")  # REST stage metrics
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .getOrCreate()
     )
 

@@ -27,6 +27,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from sabd_deduplicator_spark import registry
 from sabd_deduplicator_spark.plans.inspect import formatted_plan
+from sabd_deduplicator_spark.session import default_cpus, default_driver_memory
 
 
 def get_spark_ui(app_name: str = "profile"):
@@ -35,7 +36,7 @@ def get_spark_ui(app_name: str = "profile"):
 
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     shuffle_parts = os.environ.get(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(int(cpus), 8))
     )
@@ -52,7 +53,7 @@ def get_spark_ui(app_name: str = "profile"):
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.retainedStages", "5000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .getOrCreate()
     )
 

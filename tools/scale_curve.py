@@ -173,17 +173,18 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from sabd_deduplicator_spark import registry
+    from sabd_deduplicator_spark.session import default_cpus, default_driver_memory
 
     spark = (
         SparkSession.builder.appName("scale_curve")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        .master(f"local[{default_cpus()}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
         .config("spark.ui.enabled", "true")  # REST stage metrics
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .getOrCreate()
     )
     registry.load_all_queries()
