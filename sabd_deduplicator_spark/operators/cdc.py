@@ -17,8 +17,9 @@ Two implementations, one semantics class:
   fingerprint is ``md5`` of the trailing ``CDC_W``-char window and the cut
   predicate is a hex-prefix compare — pure SQL in both dialects, so the
   whole chunking is value-checked against DuckDB. The Spark side is a
-  per-row array-expression program (``sequence → filter → zip_with →
-  posexplode``) that runs entirely inside whole-stage codegen with ZERO
+  per-row array-expression program (window scan → ``filter`` → ``zip_with``
+  over code-point ``slice``s → ``posexplode``), linear in the document's
+  length, that runs entirely inside whole-stage codegen with ZERO
   shuffle — like the fixed chunker, embarrassingly parallel at 100 TB.
 - **Production fast path** (`chunk_cdc_gear`): the classic Gear rolling hash
   (FastCDC's core: ``h = (h << 1 + gear[byte]) & mask``) with min/max chunk
@@ -41,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sabd_deduplicator_spark.catalog import spread_if_narrow, table
+from sabd_deduplicator_spark.operators.chunker import char_pieces
 from sabd_deduplicator_spark.registry import query
 
 
@@ -64,34 +66,47 @@ def _cdc_chunks_expr(text_col: str) -> F.Column:
     A cut AFTER position i (1-based, i in [W, len-1]) iff the md5 hex of the
     trailing W-char window at i starts below CDC_CUT_HEX — lowercase fixed
     width hex compares identically as raw bytes in Spark and DuckDB (the
-    same order-isomorphism the MinHash signatures rely on). Cuts at i = len
-    are excluded so no empty trailing chunk is emitted; docs shorter than
-    W+1 have no eligible cut and come back whole. Empty/NULL text yields
-    zero chunks (the fixed chunker's convention, binary_utils.ex:16-17).
+    same order-isomorphism the MinHash signatures rely on). Docs shorter
+    than W+1 have no eligible cut and come back whole. Empty/NULL text
+    yields zero chunks (the fixed chunker's convention, binary_utils.ex:16-17).
 
-    Spark's ``sequence(a, b)`` is DESCENDING when a > b (not empty), so the
-    short-doc case must short-circuit explicitly.
+    Linear per document: the window sweep is one ``char_pieces`` scan (the
+    md5 per window is the expensive part), and each chunk is a ``slice`` of
+    the row's code-point array, built once — not a ``substring`` from the
+    string's first byte per window and per chunk (O(len²)). A cut at
+    i = len (the last window) only closes an empty trailing piece, which
+    the final filter drops; no other piece is empty, as cuts strictly
+    increase from W.
 
-    The cut list (the O(len) md5 sweep — the expensive part) is bound ONCE
-    per row via a single-element-array lambda (``transform(array(<cuts>),
-    c -> …)``): the zip_with needs the cut list twice (starts and ends),
-    and textual inlining would run the whole md5 sweep twice per row —
-    measured 2× on chunk-heavy plans. A separate projection column would
-    not survive Catalyst's CollapseProject; the lambda binding is a plain
-    expression-level let.
+    The code points and the cut list are each needed more than once, so
+    both are bound ONCE per row via a single-element-array lambda
+    (``transform(array(struct(…)), b -> …)``): textual inlining would run
+    the sweep once per use — measured 2× on chunk-heavy plans. A separate
+    projection column would not survive Catalyst's CollapseProject; the
+    lambda binding is a plain expression-level let.
     """
-    t = text_col
-    cuts = (
-        f"CASE WHEN {t} IS NULL OR length({t}) <= {CDC_W} THEN array() "
-        f"ELSE filter(sequence({CDC_W}, length({t}) - 1), "
-        f"i -> substring(md5(substring({t}, i - {CDC_W} + 1, {CDC_W})), 1, 2) "
-        f"< '{CDC_CUT_HEX}') END"
+    cuts = F.filter(
+        F.transform(
+            char_pieces(text_col, CDC_W, windows=True),
+            lambda w, k: F.when(
+                F.substring(F.md5(w), 1, 2) < CDC_CUT_HEX, k + CDC_W
+            ),
+        ),
+        lambda i: i.isNotNull(),
     )
-    return F.expr(
-        f"CASE WHEN {t} IS NULL OR length({t}) = 0 THEN array() ELSE "
-        f"flatten(transform(array({cuts}), "
-        f"c -> zip_with(concat(array(0), c), concat(c, array(length({t}))), "
-        f"(s, e) -> substring({t}, s + 1, e - s)))) END"
+    row = F.struct(char_pieces(text_col, 1).alias("cp"), cuts.alias("cuts"))
+    return F.flatten(
+        F.transform(
+            F.array(row),
+            lambda b: F.filter(
+                F.zip_with(
+                    F.concat(F.array(F.lit(0)), b["cuts"]),
+                    F.concat(b["cuts"], F.array(F.size(b["cp"]))),
+                    lambda s, e: F.array_join(F.slice(b["cp"], s + 1, e - s), ""),
+                ),
+                lambda piece: piece != "",
+            ),
+        )
     )
 
 

@@ -4,18 +4,21 @@ Reference: /root/reference/lib/deduplicator/binary_utils.ex:14-24 splits a
 binary into fixed-n-byte pieces (last piece may be short);
 /root/reference/lib/deduplicator/files.ex:45-56 streams a file through it.
 
-Spark-first design: chunking is a *generator expression* —
-``sequence → transform → posexplode`` — fully inside whole-stage codegen, no
-Python. The stream position becomes an explicit ``line`` column (Spark has no
-implicit row order; SURVEY.md §4 hazard 1). At 100 TB this runs embarrassingly
-parallel per input row with zero shuffle.
+Spark-first design: chunking is a *generator expression* — one
+``regexp_extract_all`` scan of the row's text (``char_pieces``) →
+``posexplode`` — fully inside whole-stage codegen, no Python. One linear pass
+per document, like the reference's splitter: a ``substring(text, i, n)`` per
+chunk would re-count characters from the string's first byte on every call,
+O(len²) per document. The stream position becomes an explicit ``line``
+column (Spark has no implicit row order; SURVEY.md §4 hazard 1). At 100 TB
+this runs embarrassingly parallel per input row with zero shuffle.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sabd_deduplicator_spark import catalog
@@ -24,27 +27,53 @@ from sabd_deduplicator_spark.registry import query
 DEFAULT_CHUNK_SIZE = 16
 
 
+def char_pieces(text_col: str, n: int, *, windows: bool = False) -> Column:
+    """One array per row of ``text_col``'s ≤``n``-char chunks (the last may
+    be short), or with ``windows=True`` of its stride-1 ``n``-char windows,
+    in character (code point) units — both from ONE linear regex scan.
+    NULL text gives NULL, text shorter than ``n`` no windows, "" nothing.
+
+    Windows are zero-width lookahead matches. Java advances past an empty
+    match by one UTF-16 unit, so the negative lookahead keeps a window from
+    starting on the low half of a surrogate pair (a supplementary-plane
+    character). The regex sees the row as a Java string, which turns
+    malformed UTF-8 into U+FFFD; such rows (``is_valid_utf8`` false) keep
+    the positional ``substring`` definition, O(len²) but byte-exact, so
+    recovery of arbitrary bytes stays exact."""
+    t = F.col(text_col)
+    if windows:
+        scan = F.regexp_extract_all(
+            t, F.lit(rf"(?s)(?![\x{{DC00}}-\x{{DFFF}}])(?=(.{{{n}}}))"), F.lit(1)
+        )
+        positional = (
+            f"CASE WHEN length({text_col}) < {n} THEN array() "
+            f"ELSE transform(sequence(1, length({text_col}) - {n} + 1), "
+            f"i -> substring({text_col}, i, {n})) END"
+        )
+    else:
+        scan = F.regexp_extract_all(t, F.lit(f"(?s).{{1,{n}}}"), F.lit(0))
+        # only NULL (→ NULL) and malformed rows get here, and a malformed
+        # row is never empty, so the descending sequence(0, -1) cannot arise
+        positional = (
+            f"transform(sequence(0, cast(ceil(length({text_col}) / {n}.0) AS INT) - 1), "
+            f"i -> substring({text_col}, i * {n} + 1, {n}))"
+        )
+    return F.when(F.is_valid_utf8(t), scan).otherwise(F.expr(positional))
+
+
 def chunk_fixed(
     df: DataFrame,
     text_col: str = "text",
     id_cols: Sequence[str] = ("doc_id",),
     size: int = DEFAULT_CHUNK_SIZE,
 ) -> DataFrame:
-    """Explode ``text_col`` into ≤``size``-char chunks with a 0-based ``line``.
-
-    Guard: ``sequence(0, -1)`` in Spark produces a *descending* [0, -1] array
-    (not empty!), so empty strings must short-circuit to array() explicitly —
-    an empty input yields zero chunks (binary_utils.ex:16-17 base case).
-    """
+    """Explode ``text_col`` into ≤``size``-char chunks with a 0-based ``line``
+    (``char_pieces``: one scan per document). Empty and NULL text yield zero
+    chunks (binary_utils.ex:16-17 base case)."""
     if size <= 0:
         raise ValueError("chunk size must be positive")
-    arr = F.expr(
-        f"CASE WHEN length({text_col}) = 0 OR {text_col} IS NULL THEN array() "
-        f"ELSE transform(sequence(0, cast(ceil(length({text_col}) / {size}.0) AS INT) - 1), "
-        f"i -> substring({text_col}, i * {size} + 1, {size})) END"
-    )
     return df.select(
-        *id_cols, F.posexplode(arr).alias("line", "chunk")
+        *id_cols, F.posexplode(char_pieces(text_col, size)).alias("line", "chunk")
     ).withColumn("line", F.col("line").cast("long"))
 
 

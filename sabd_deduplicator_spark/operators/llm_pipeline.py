@@ -35,6 +35,7 @@ from sabd_deduplicator_spark.catalog import (
     source_token,
     table,
 )
+from sabd_deduplicator_spark.operators.chunker import char_pieces
 from sabd_deduplicator_spark.operators.dedup import _packed_ordinal
 from sabd_deduplicator_spark.operators.similarity import (
     _MINHASH_ORACLE as _MINHASH_ORACLE_SQL,
@@ -243,21 +244,26 @@ def _stride1_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _windows_keyed(docs: DataFrame, key) -> DataFrame:
+    """(doc_id, i, h): ``key`` (a Column function) of every stride-1
+    SUBSTR_W-char window of each document's text, with its 1-based char
+    position — one linear char_pieces scan per document. NULL and short
+    texts yield no rows."""
+    # wrapped: F.transform rejects F.xxhash64's *cols signature as a lambda
+    wins = F.transform(
+        char_pieces("text", SUBSTR_W, windows=True), lambda w: key(w)
+    )
+    return docs.select(
+        "doc_id", F.posexplode(wins).alias("i0", "h")
+    ).select("doc_id", (F.col("i0") + 1).cast("long").alias("i"), "h")
+
+
 def _stride1_windows_df(docs: DataFrame) -> DataFrame:
     """Relation-valued core of _stride1_windows: stride-1 window hashes of
     an arbitrary (doc_id, text, ...) DataFrame — the api cut stage feeds
     caller-supplied corpora through the same detector the registered
     queries use."""
-    d = docs.filter(
-        F.col("text").isNotNull() & (F.length("text") >= SUBSTR_W)
-    )
-    wins = F.expr(
-        f"transform(sequence(1, length(text) - {SUBSTR_W} + 1), "
-        f"i -> md5(substring(text, i, {SUBSTR_W})))"
-    )
-    return d.select(
-        "doc_id", F.posexplode(wins).alias("i0", "h")
-    ).select("doc_id", (F.col("i0") + 1).cast("long").alias("i"), "h")
+    return _windows_keyed(docs, F.md5)
 
 
 _SUBSTR_CENSUS_ORACLE = (
@@ -433,24 +439,19 @@ def _fp_positions_df(docs: DataFrame) -> DataFrame:
     combine and ~2.3× lighter semi-join probe rows, with the whole
     relation staying inside whole-stage codegen.
 
-    Measured A/B of the three candidate keys on the full span extraction
-    at sf0.1 (warm session, median of 3): xxhash64 1.54 s, md5 1.73 s,
-    Arrow Rabin-Karp positions 1.81 s — the rolling-hash pass wins for the
-    CENSUS (where the Arrow side pre-combines to one row per distinct
-    window per shard) but loses for POSITIONS, where the uncombined
-    relation would cross the Python→JVM Arrow boundary at full mass;
-    xxhash64 keeps it columnar and codegen'd. Equivalence of the span/flag
-    outputs vs the md5 relation is pinned in tests/test_llm_pipeline.py."""
-    d = docs.filter(
-        F.col("text").isNotNull() & (F.length("text") >= SUBSTR_W)
-    )
-    wins = F.expr(
-        f"transform(sequence(1, length(text) - {SUBSTR_W} + 1), "
-        f"i -> xxhash64(substring(text, i, {SUBSTR_W})))"
-    )
-    return d.select(
-        "doc_id", F.posexplode(wins).alias("i0", "h")
-    ).select("doc_id", (F.col("i0") + 1).cast("long").alias("i"), "h")
+    The rolling-hash pass wins for the CENSUS (where the Arrow side
+    pre-combines to one row per distinct window per shard) but not for
+    POSITIONS, where the uncombined relation would cross the Python→JVM
+    Arrow boundary at full mass; xxhash64 keeps it columnar and codegen'd.
+    (The recorded A/B of the three keys — xxhash64 1.54 s, md5 1.73 s,
+    Arrow Rabin-Karp positions 1.81 s on the sf0.1 span extraction — was
+    taken while each window was still a positional ``substring``, O(len²)
+    per document, which dominated all three; it has not been re-taken on
+    the linear window scan.) Equivalence of the span/flag outputs vs the
+    md5 relation is pinned in tests/test_llm_pipeline.py, and of both
+    window relations vs the positional definition in
+    tests/test_chunk_kernels.py."""
+    return _windows_keyed(docs, F.xxhash64)
 
 
 def _stride1_windows_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -616,8 +617,10 @@ def exactsubstr_cut(docs: DataFrame) -> DataFrame:
     chars_cut, and re-inserting the extracted spans at span_start
     reconstructs the original exactly (tested in test_llm_pipeline.py).
 
-    Scale shape: windows explode (map-only) → one shuffle on the window
-    hash (map-side-combined count) → semi-join (AQE-splittable) → per-doc
+    Scale shape: windows explode (map-only; one linear char_pieces scan
+    per document and an 8-byte key per window, O(len·W) — not a positional
+    substring per window, O(len²)) → one shuffle on the window hash
+    (map-side-combined count) → semi-join (AQE-splittable) → per-doc
     island window (partitioned by doc_id, repeated positions only) → ONE
     collect-spans aggregate (bounded: ≤ len/W spans per doc) → hash join
     back to the corpus → the cut itself is a pure fold expression. No

@@ -34,8 +34,10 @@ def chunk_binary_content(
     files: DataFrame, size: int, content_col: str = "content"
 ) -> DataFrame:
     """(path, content) → (path, line, chunk:binary): the reference's
-    Files.read(filename, bytes) as a distributed scan. Same empty-input guard
-    as the text chunker (Spark sequence(0,-1) is descending, not empty)."""
+    Files.read(filename, bytes) as a distributed scan. Empty input needs its
+    own guard (Spark sequence(0,-1) is descending, not empty). A binary
+    substring indexes bytes directly, so the positional form is linear here,
+    unlike a string substring, which counts characters from the first byte."""
     if size <= 0:
         raise ValueError("chunk size must be positive")
     arr = F.expr(
