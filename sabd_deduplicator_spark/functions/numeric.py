@@ -24,12 +24,3 @@ def dsum(col: str | Column, scale: str = MONEY) -> Column:
 def dsum_sql(expr: str, scale: str = "DECIMAL(18,2)") -> str:
     return f"CAST(sum(CAST({expr} AS {scale})) AS DOUBLE)"
 
-
-def davg(col: str | Column, scale: str = MONEY) -> Column:
-    """Deterministic average: exact decimal sum / count, divided in double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(scale)).cast("double") / F.count(c)
-
-
-def davg_sql(expr: str, scale: str = "DECIMAL(18,2)") -> str:
-    return f"CAST(sum(CAST({expr} AS {scale})) AS DOUBLE) / count({expr})"

@@ -27,11 +27,13 @@ from sabd_deduplicator_spark.registry import query
 DEFAULT_CHUNK_SIZE = 16
 
 
-def char_pieces(text_col: str, n: int, *, windows: bool = False) -> Column:
-    """One array per row of ``text_col``'s ≤``n``-char chunks (the last may
-    be short), or with ``windows=True`` of its stride-1 ``n``-char windows,
-    in character (code point) units — both from ONE linear regex scan.
-    NULL text gives NULL, text shorter than ``n`` no windows, "" nothing.
+def char_pieces(text: str | Column, n: int, *, windows: bool = False) -> Column:
+    """One array per row of ``text``'s ≤``n``-char chunks (the last may be
+    short), or with ``windows=True`` of its stride-1 ``n``-char windows, in
+    character (code point) units — both from ONE linear regex scan. NULL
+    text gives NULL, text shorter than ``n`` no windows, "" nothing.
+    ``text`` is a column name or any string Column, a lambda variable of a
+    higher-order function included.
 
     Windows are zero-width lookahead matches. Java advances past an empty
     match by one UTF-16 unit, so the negative lookahead keeps a window from
@@ -40,25 +42,26 @@ def char_pieces(text_col: str, n: int, *, windows: bool = False) -> Column:
     malformed UTF-8 into U+FFFD; such rows (``is_valid_utf8`` false) keep
     the positional ``substring`` definition, O(len²) but byte-exact, so
     recovery of arbitrary bytes stays exact."""
-    t = F.col(text_col)
+    t = F.col(text) if isinstance(text, str) else text
+    width = F.lit(n)
     if windows:
         scan = F.regexp_extract_all(
             t, F.lit(rf"(?s)(?![\x{{DC00}}-\x{{DFFF}}])(?=(.{{{n}}}))"), F.lit(1)
         )
-        positional = (
-            f"CASE WHEN length({text_col}) < {n} THEN array() "
-            f"ELSE transform(sequence(1, length({text_col}) - {n} + 1), "
-            f"i -> substring({text_col}, i, {n})) END"
+        positional = F.when(F.length(t) < n, F.array()).otherwise(
+            F.transform(
+                F.sequence(F.lit(1), F.length(t) - n + 1), lambda i: t.substr(i, width)
+            )
         )
     else:
         scan = F.regexp_extract_all(t, F.lit(f"(?s).{{1,{n}}}"), F.lit(0))
         # only NULL (→ NULL) and malformed rows get here, and a malformed
         # row is never empty, so the descending sequence(0, -1) cannot arise
-        positional = (
-            f"transform(sequence(0, cast(ceil(length({text_col}) / {n}.0) AS INT) - 1), "
-            f"i -> substring({text_col}, i * {n} + 1, {n}))"
+        positional = F.transform(
+            F.sequence(F.lit(0), F.ceil(F.length(t) / n).cast("int") - 1),
+            lambda i: t.substr(i * n + 1, width),
         )
-    return F.when(F.is_valid_utf8(t), scan).otherwise(F.expr(positional))
+    return F.when(F.is_valid_utf8(t), scan).otherwise(positional)
 
 
 def chunk_fixed(

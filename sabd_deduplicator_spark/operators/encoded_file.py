@@ -10,10 +10,10 @@ file-level parity:
   byte-exact roundtrip tests. Ordering is explicit (sort_array over (line,
   token) structs); the heavy lifting stays distributed, only the final
   per-file string is wide (test-scale only, SURVEY.md §7 'what's hard' (b)).
-- `parse_encoded_string`: the fixed-width parser as a generator expression —
-  token i starts at a position derivable in closed form because literal
-  tokens are exactly (1+chunk_size) chars and pointers (1+width) chars; a
-  cumulative-offset walk is expressed with aggregate() over a position fold.
+- `parse_encoded_string`: the fixed-width parser as one regex scan — a
+  '0' marker starts a literal of at most (1+chunk_size) chars, anything
+  else a pointer of (1+width) chars, so the tokens are the successive
+  matches of one alternation.
 """
 
 from __future__ import annotations
@@ -48,19 +48,28 @@ def parse_encoded_string(
     encoded_col: str = "encoded",
 ) -> DataFrame:
     """(file, encoded) → (file, line, token): the reference's stateful
-    fixed-width parse, re-expressed as a position FOLD inside aggregate():
-    each step looks at the marker char at the current offset, takes
-    (1+chunk_size) or (1+pointer_width) chars, and advances. Runs entirely
-    in the JVM; one row per input file, parallel across files."""
+    fixed-width parse. At each offset a '0' marker starts a literal of up
+    to 1+chunk_size chars (the last chunk may be short); any other char
+    starts a 1+pointer_width pointer. That is ONE left-to-right regex scan,
+    ``0.{0,chunk_size}|.{1,1+pointer_width}``, linear in the file's length
+    and independent of which token kind is shorter. Rows that are not valid
+    UTF-8 keep the positional fold over ``substring`` (O(len²) but
+    byte-exact), as ``chunker.char_pieces`` does. Runs entirely in the JVM;
+    one row per input file, parallel across files."""
     lit_w = 1 + chunk_size
     ptr_w = 1 + pointer_width
-    # state: struct(pos, toks array). Upper bound on steps: every token is a
-    # pointer (the shortest) → ceil(len / ptr_w) iterations; extra steps no-op.
-    parse = F.expr(
+    e = F.col(encoded_col)
+    scan = F.regexp_extract_all(
+        e, F.lit(f"(?s)0.{{0,{chunk_size}}}|.{{1,{ptr_w}}}"), F.lit(0)
+    )
+    # state: struct(pos, toks array). Every token but the last is at least
+    # min(lit_w, ptr_w) chars, which bounds the steps; extra steps no-op.
+    min_w = min(lit_w, ptr_w)
+    fold = F.expr(
         f"""
         aggregate(
           sequence(1, CASE WHEN length({encoded_col}) = 0 THEN 0
-                           ELSE cast(ceil(length({encoded_col}) / {ptr_w}.0) AS INT) END),
+                           ELSE cast(ceil(length({encoded_col}) / {min_w}.0) AS INT) END),
           struct(cast(1 as int) AS pos, cast(array() as array<string>) AS toks),
           (acc, _) -> CASE
             WHEN acc.pos > length({encoded_col}) THEN acc
@@ -77,6 +86,7 @@ def parse_encoded_string(
           acc -> acc.toks)
         """
     )
+    parse = F.when(F.is_valid_utf8(e), scan).otherwise(fold)
     return encoded.select(
         file_col, F.posexplode(parse).alias("line", "token")
     ).withColumn("line", F.col("line").cast("long"))

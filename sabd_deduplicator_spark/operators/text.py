@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sabd_deduplicator_spark.catalog import table
+from sabd_deduplicator_spark.operators.chunker import char_pieces
 from sabd_deduplicator_spark.registry import query
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
@@ -830,21 +831,16 @@ def bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the corpus — the exact statistic byte-pair encoding merges first
     (Sennrich ACL'16). At iteration 0 every symbol is one character, so
     candidates are the in-token character bigrams; the census is one
-    explode (codegen: per-token 2-char substrings) and ONE hash aggregate,
-    with the same k-th-value-prefilter top-k as top_tokens_corpus. Re-run
+    explode (the stride-1 2-char windows of one char_pieces scan per
+    token) and ONE hash aggregate, with the same k-th-value-prefilter
+    top-k as top_tokens_corpus. Re-run
     against a symbolized corpus, the identical shape scores every later
     merge round — each BPE iteration at 100 TB is exactly this query."""
     d = table(spark, sf_dir, "documents")
     pairs = (
         d.select(F.explode(F.split("text", " ")).alias("t"))
         .select(
-            F.explode(
-                F.expr(
-                    "CASE WHEN length(t) < 2 THEN array() "
-                    "ELSE transform(sequence(1, length(t) - 1), "
-                    "i -> substring(t, i, 2)) END"
-                )
-            ).alias("pair")
+            F.explode(char_pieces("t", 2, windows=True)).alias("pair")
         )
         .groupBy("pair")
         .agg(F.count("*").alias("n"))
@@ -1238,7 +1234,7 @@ def _learn_bpe_rounds(
             F.split(F.replace(F.col("text"), F.lit(_BSEP), F.lit("")), " ")
         ).alias("t")
     ).filter(F.length("t") >= 1)
-    chars = F.expr("transform(sequence(1, length(t)), i -> substring(t, i, 1))")
+    chars = char_pieces("t", 1)
     st = tok.select(
         F.concat(
             sep2_lit, F.array_join(chars, _BSEP + _BSEP), sep2_lit
@@ -1366,7 +1362,7 @@ def bpe_encode_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t")
         .agg(F.count("*").cast("long").alias("freq"))
     )
-    chars = F.expr("transform(sequence(1, length(t)), i -> substring(t, i, 1))")
+    chars = char_pieces("t", 1)
     enc = vocab.withColumn(
         "state", F.concat(F.lit(sep2), F.array_join(chars, sep2), F.lit(sep2))
     )
@@ -1470,11 +1466,14 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = d.select(F.col("doc_id"), toks.alias("toks")).select(
         "doc_id",
         F.size("toks").cast("long").alias("n_tokens"),
-        F.expr(
-            "array_join(transform(toks, t -> "
-            "char(1) || char(1) || array_join(transform("
-            "sequence(1, length(t)), i -> substring(t, i, 1)), "
-            "char(1) || char(1)) || char(1) || char(1)), '')"
+        F.array_join(
+            F.transform(
+                "toks",
+                lambda t: F.concat(
+                    F.lit(sep2), F.array_join(char_pieces(t, 1), sep2), F.lit(sep2)
+                ),
+            ),
+            "",
         ).alias("state"),
     )
     for _, a, b, _n in merges:

@@ -52,13 +52,9 @@ def load_all_queries() -> None:
         lookups,
         minhash_index,
         multimodal,
-        relational,
         similarity,
         sketches,
         text,
-        timeseries,
-        tpch_extra,
-        tpch_extra2,
         udx,
     )
     from sabd_deduplicator_spark.streaming import registered  # noqa: F401

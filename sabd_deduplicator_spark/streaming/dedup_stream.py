@@ -82,8 +82,9 @@ def stream_windowed_event_counts(
     window: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Tumbling-window event counts with late-data handling — the streaming
-    twin of the batch `events_tumbling_1h` query.
+    """Tumbling-window event counts with late-data handling; with no late
+    rows it equals the batch hourly group-by of `streaming_tumbling_counts`'
+    oracle.
 
     Watermarks require TIMESTAMP (LTZ) event time — NTZ is rejected
     (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE) — so the stream boundary casts;

@@ -260,7 +260,7 @@ def streaming_dedup_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling-window aggregation, complete mode: after the drain
     the state holds the full aggregate — identical to the batch group-by
-    (events_tumbling_1h's streaming twin, same oracle)."""
+    its oracle states."""
     from sabd_deduplicator_spark.catalog import table
 
     staged = _stage(

@@ -46,6 +46,32 @@ def test_file_level_roundtrip(spark):
     )
 
 
+def test_roundtrip_when_literals_are_shorter_than_pointers(spark):
+    """chunk_size 2 under the default pointer width 4: a literal token (3
+    chars) is shorter than a pointer (5 chars). Every token must come back,
+    on the regex path and on the positional path of a malformed-UTF-8 row."""
+    size = 2
+    docs = spark.sql(
+        "SELECT 0L AS doc_id, 'abcdefghijklmnopqrstuvwxyzABCD' AS text "
+        "UNION ALL SELECT 1L, repeat('ab', 8) || 'c' "
+        "UNION ALL SELECT 2L, CAST(unhex('61C32862FF636465666768696162') AS STRING)"
+    )
+    chunks = chunk_fixed(docs, size=size)
+    tokens = encode_chunks(chunks, file_col="doc_id")
+    reparsed = parse_encoded_string(encoded_file_string(tokens), chunk_size=size)
+    counts = {r.doc_id: r.n for r in reparsed.groupBy("doc_id").agg(
+        F.count("*").alias("n")).collect()}
+    assert counts == {0: 15, 1: 9, 2: 7}
+    assert frames_equal_unordered(
+        tokens.select("doc_id", "line", "token"),
+        reparsed.select("doc_id", "line", "token"),
+    )
+    rec = decode_tokens(reparsed, file_col="doc_id")
+    assert frames_equal_unordered(
+        chunks.select("doc_id", "line", "chunk"),
+        rec.select("doc_id", "line", "chunk"),
+    )
+
 def test_encoded_string_is_ordered(spark):
     chunks = chunk_fixed(_docs(spark), size=4)
     tokens = encode_chunks(chunks, file_col="doc_id")

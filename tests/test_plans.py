@@ -11,7 +11,6 @@ from sabd_deduplicator_spark.plans.inspect import (
     formatted_plan,
     has_broadcast_join,
     has_row_python_udf,
-    pushed_filters,
     read_schema_columns,
 )
 
@@ -52,51 +51,6 @@ def test_winnow_is_single_arrow_eval(spark, sf_dir):
     assert "Exchange" not in plan  # narrow: no shuffle anywhere
 
 
-def test_q1_aggregates_on_longs(spark, sf_dir):
-    """q1's hot path must sum LONGS (exact cents), not Decimals — the
-    decimal descale belongs in the post-agg projection only. The overflow
-    guard for the two product sums is the base-1e6 LIMB split (three long
-    sums each, recombined post-agg), so the aggregate must carry >= 8 long
-    partial sums and still zero decimal ones."""
-    plan = formatted_plan(q("q1_pricing_summary", spark, sf_dir))
-    import re
-
-    partials = re.findall(r"partial_sum\([^)]*\)", plan)
-    assert len(partials) >= 8, partials  # qty, ext, disc + 2 products × 3 limbs
-    assert not any("decimal" in p.lower() for p in partials), partials
-
-
-def test_limb_split_sum_matches_exact_integer_arithmetic(spark):
-    """The q1 overflow guard's core identity: summing base-1e6 limbs as
-    longs and recombining in decimal must equal exact Python int summation,
-    including values straddling limb boundaries and the documented 2^53
-    extraction ceiling."""
-    from pyspark.sql import functions as F
-
-    from sabd_deduplicator_spark.operators.relational import (
-        _limbs,
-        _recombine_limb_sums,
-    )
-
-    import random
-
-    rng = random.Random(11)
-    vals = [
-        0, 1, 999_999, 1_000_000, 1_000_001,
-        999_999_999_999, 10**12, 10**12 + 1,
-        (1 << 53) - 1,  # extraction ceiling
-        123_456_789_012_345,
-    ] + [rng.randrange(0, 1 << 53) for _ in range(200)]
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    lo, mid, hi = _limbs(F.col("v"))
-    got = (
-        df.agg(
-            F.sum(lo).alias("x_lo"), F.sum(mid).alias("x_mid"), F.sum(hi).alias("x_hi")
-        )
-        .select(_recombine_limb_sums("x").cast("string").alias("s"))
-        .first()["s"]
-    )
-    assert int(got) == sum(vals)
 
 
 def test_multiprobe_lsh_is_partitioning_invariant(spark, sf_dir):
@@ -124,22 +78,14 @@ def test_multiprobe_lsh_is_partitioning_invariant(spark, sf_dir):
 
 
 def test_dimension_joins_broadcast(spark, sf_dir):
-    """customer/nation/region joins must be broadcast: the orders fact table
+    """The catalog's dimension-side joins must be broadcast: the fact side
     never shuffles for the join."""
-    assert has_broadcast_join(q("multi_join_revenue_by_nation", spark, sf_dir))
     assert has_broadcast_join(q("catalog_join", spark, sf_dir))
 
 
-def test_filter_pushdown_reaches_scan(spark, sf_dir):
-    pf = pushed_filters(q("filter_project_orders", spark, sf_dir))
-    assert "o_orderstatus" in pf and "o_totalprice" in pf
-
 
 def test_column_pruning(spark, sf_dir):
-    """A 4-column projection must not read the whole orders table."""
-    cols = set(read_schema_columns(q("filter_project_orders", spark, sf_dir)))
-    assert "o_orderpriority" in cols or len(cols) <= 5
-    assert "o_comment" not in cols  # not even present, but guard regardless
+    """A dedup scan must read only the document columns it uses."""
     cols_docs = set(read_schema_columns(q("dedup_first_occurrence", spark, sf_dir)))
     assert cols_docs <= {"doc_id", "text"}
 
@@ -152,19 +98,6 @@ def test_hash_links_single_shuffle(spark, sf_dir):
     assert "Window" not in formatted_plan(df)
 
 
-def test_asof_is_not_quadratic(spark, sf_dir):
-    """The as-of must be the union-window plan (one join-free window pass),
-    not a time-range join that multiplies rows per key."""
-    plan = formatted_plan(q("asof_latest_order_per_event", spark, sf_dir))
-    assert "Join" not in plan  # union + window only
-    assert "Window" in plan
-
-
-def test_band_join_is_equi_not_nested_loop(spark, sf_dir):
-    """Bucketed band join must hash-join on the bucket key; a
-    BroadcastNestedLoopJoin here would be the quadratic plan."""
-    plan = formatted_plan(q("range_join_close_prices", spark, sf_dir))
-    assert "NestedLoop" not in plan
 
 
 def test_minhash_stays_jvm_side_equi_joins(spark, sf_dir):
@@ -248,10 +181,7 @@ def test_spread_if_narrow_is_noop_on_wide_input(spark, sf_dir):
 @pytest.mark.parametrize(
     "name",
     [
-        "q1_pricing_summary",
-        "pivot_events_by_type",
         "dedup_hash_links",
-        "multi_join_revenue_by_nation",
         "dedup_refcount",
     ],
 )
@@ -268,9 +198,6 @@ def test_aggregates_stay_hash_based(name, spark, sf_dir):
     "name,max_exchanges",
     [
         ("dedup_refcount", 1),
-        ("q1_pricing_summary", 1),
-        ("multi_join_revenue_by_nation", 1),
-        ("events_tumbling_1h", 1),
         ("chunk_scan_fixed", 0),
         # CDC boundaries are per-row window hashes — zero shuffles of its
         # own; the 1 budget is catalog.spread_if_narrow's adaptive
@@ -281,9 +208,6 @@ def test_aggregates_stay_hash_based(name, spark, sf_dir):
         ("doc_feature_hash_vector", 1),  # explode + ONE hash aggregate
         ("text_fingerprint", 0),
         ("vector_norms", 0),
-        ("q14_promo_revenue", 1),   # part broadcasts; only the final agg shuffles
-        ("q19_band_or_revenue", 1),  # pruned part broadcasts; only the final agg
-        ("q5_local_supplier_volume", 3),  # fact-fact join (2) + group agg (1)
     ],
 )
 def test_shuffle_budget(name, max_exchanges, spark, sf_dir):
@@ -328,33 +252,13 @@ def test_similarity_topk_has_no_global_window_over_corpus(spark, sf_dir):
     """Global top-k must prefilter to the k-th value before any
     single-partition window: the Window input is the survivor set, reached
     only after a join against the broadcast k-th-value row."""
-    for name in ("similarity_topk_cosine", "q3_shipping_priority"):
-        plan = formatted_plan(q(name, spark, sf_dir))
-        assert "Window" in plan, name
-        w_pos = plan.index("Window")
-        assert "BroadcastHashJoin" in plan[w_pos:] or "BroadcastNestedLoopJoin" in plan[
-            w_pos:
-        ], f"{name}: window not fed by the kth-value prefilter join"
+    plan = formatted_plan(q("similarity_topk_cosine", spark, sf_dir))
+    assert "Window" in plan
+    w_pos = plan.index("Window")
+    assert "BroadcastHashJoin" in plan[w_pos:] or "BroadcastNestedLoopJoin" in plan[
+        w_pos:
+    ], "window not fed by the kth-value prefilter join"
 
-
-def test_tpch_extra_shapes(spark, sf_dir):
-    """Scale gates for the Q4-Q22 family: EXISTS/NOT EXISTS plan as semi/anti
-    equi-joins (never nested loops over facts), dimension chains broadcast,
-    and Q10's global top-20 window is fed by the k-th-value prefilter."""
-    p4 = formatted_plan(q("q4_order_priority_exists", spark, sf_dir))
-    assert "LeftSemi" in p4 and "BroadcastNestedLoopJoin" not in p4
-    p22 = formatted_plan(q("q22_global_sales_opportunity", spark, sf_dir))
-    assert "LeftAnti" in p22
-    for name in ("q7_volume_shipping", "q8_market_share", "q9_product_profit"):
-        plan = formatted_plan(q(name, spark, sf_dir))
-        assert "BroadcastHashJoin" in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
-    p10 = formatted_plan(q("q10_returned_items", spark, sf_dir))
-    w_pos = p10.index("Window")
-    assert "Join" in p10[w_pos:], "q10 window not fed by the prefilter join"
-    # Q6 is scan-bound: every predicate must reach the parquet reader
-    pf = pushed_filters(q("q6_forecast_revenue", spark, sf_dir))
-    assert "l_shipdate" in pf and "l_discount" in pf and "l_quantity" in pf
 
 
 def test_llm_pipeline_shapes(spark, sf_dir):
@@ -388,32 +292,6 @@ def test_llm_pipeline_shapes(spark, sf_dir):
     assert data_windows and all("block" in s for s in data_windows), specs
 
 
-def test_q21_chained_subqueries_stay_equi_joins(spark, sf_dir):
-    """Q21's EXISTS/NOT EXISTS with a != residual must plan as equi hash/
-    sort-merge joins on l_orderkey (residual as Join condition), never a
-    BroadcastNestedLoopJoin — the nested loop is quadratic at scale."""
-    plan = formatted_plan(q("q21_sole_late_supplier", spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "LeftSemi" in plan and "LeftAnti" in plan
-
-
-def test_tpch_extra2_shapes(spark, sf_dir):
-    """Scale gates for the Q2/Q11/Q16/Q20 family (derived-offers relation):
-    the only data-sized shuffle is the offers aggregation; every dimension
-    side (supplier chain, per-part min, one-row total, excluded suppliers,
-    surviving suppkeys) broadcasts; NOT IN on the non-null key plans as a
-    plain anti join, and nothing degenerates to a nested loop."""
-    p2 = formatted_plan(q("q2_min_cost_supplier", spark, sf_dir))
-    assert "BroadcastHashJoin" in p2
-    assert "BroadcastNestedLoopJoin" not in p2
-    p11 = formatted_plan(q("q11_important_parts", spark, sf_dir))
-    # the global-scalar HAVING arrives as a broadcast of a ONE-row aggregate;
-    # a nested-loop join against one row is constant work, not quadratic
-    assert "BroadcastHashJoin" in p11 or "BroadcastNestedLoopJoin" in p11
-    p16 = formatted_plan(q("q16_supplier_part_counts", spark, sf_dir))
-    assert "LeftAnti" in p16 and "BroadcastNestedLoopJoin" not in p16
-    p20 = formatted_plan(q("q20_excess_suppliers", spark, sf_dir))
-    assert "LeftSemi" in p20 and "BroadcastNestedLoopJoin" not in p20
 
 
 def test_source_overlap_pair_join_is_distinct_level(spark, sf_dir):

@@ -60,7 +60,7 @@ def test_all_registered_outputs_scalar_typed(built_queries):
     array/map/struct columns crash it (round-2 red row: label_centroids).
     Every registered query must emit only scalar-typed columns. Builds come
     from the session-shared cache: constructing the streaming/CC queries
-    executes their full drains, so rebuilding all 142 here would re-run a
+    executes their full drains, so rebuilding every query here would re-run a
     large fraction of the workload just to read schemas (advisor, round 4)."""
     from pyspark.sql import types as T
 

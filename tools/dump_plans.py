@@ -21,24 +21,6 @@ HEADLINERS = {
         "defense), HashAggregate not SortAggregate (packed-long ordinal), "
         "no Window."
     ),
-    "filter_project_orders": (
-        "Scan hygiene. Expect: PushedFilters carrying o_orderstatus/"
-        "o_totalprice, ReadSchema limited to the 4 projected columns."
-    ),
-    "multi_join_revenue_by_nation": (
-        "Dimension joins. Expect: BroadcastHashJoin ×3 (customer/nation/"
-        "region), the orders fact never shuffles for the join; a single "
-        "Exchange for the final aggregation."
-    ),
-    "asof_latest_order_per_event": (
-        "Union-window as-of. Expect: Union + one Exchange + Window with "
-        "last(ignorenulls); NO join operator anywhere."
-    ),
-    "range_join_close_prices": (
-        "Bucketed band join. Expect: equi SortMergeJoin/ShuffledHashJoin on "
-        "`bucket` with the ±0.5 band as residual condition; no "
-        "BroadcastNestedLoopJoin."
-    ),
     "roundtrip_recovery": (
         "Recovery. Expect: literals ∪ (pointers ⋈ literals) — one join on "
         "(file, line), no positional re-scan structure."
@@ -52,22 +34,11 @@ HEADLINERS = {
         "with the null-aware flag (trailing `true` in the executed-plan "
         "string) — plain left_anti would be wrong under tri-valued logic."
     ),
-    "q17_small_quantity_revenue": (
-        "Correlated scalar subquery, decorrelated. Expect: per-part avg as "
-        "HashAggregate + shuffle on l_partkey reused by the probe join; "
-        "part dimension broadcast."
-    ),
     "embedding_neardup_pairs": (
         "Tiled all-pairs BLAS. Expect: two collect_list aggregates (block "
         "build), a join forming the upper-triangular block grid, one "
         "MapInPandas (the matmul kernel) — NO driver-side collect, no "
         "per-pair expression evaluation."
-    ),
-    "q5_local_supplier_volume": (
-        "Q5 shape. Expect: BroadcastHashJoins for region→nation→supplier "
-        "and customer; exactly one fact-fact shuffle join (lineitem⋈orders "
-        "on l_orderkey) carrying the same-nation residual; one final "
-        "aggregate Exchange."
     ),
     "merge_apply_changes": (
         "Full MERGE. Expect: WindowGroupLimit (per-partition top-1 "
@@ -105,23 +76,10 @@ HEADLINERS = {
         "3.5x slower) and NOT 5 unpruned scans (each branch's ReadSchema is "
         "exactly one column)."
     ),
-    "q1_pricing_summary": (
-        "Canonical wide aggregate. Expect: one scan, partial+final "
-        "HashAggregate over LONG sums only (exact integer cents/basis-points "
-        "— no Decimal aggregation buffers in the hot path; the two product "
-        "columns are base-1e6 limb triples so their long sums cannot wrap "
-        "below ~9e12 rows/group), limb recombination + decimal descale + "
-        "double cast only in the post-agg Project."
-    ),
     "text_winnow_fingerprint": (
         "The one sanctioned Python hot loop. Expect: narrow scan + codegen "
         "length filter, then a single ArrowEvalPython (vectorized "
         "Rabin-Karp kernel) — no BatchEvalPython, no shuffle."
-    ),
-    "q8_market_share": (
-        "Q8 shape. Expect: every dimension chain (part type, supplier→"
-        "nation, customer→nation→region) as BroadcastHashJoin; exactly one "
-        "fact-fact shuffle (lineitem⋈orders) + the final year aggregate."
     ),
     "span_dedup_corpus": (
         "Corpus span dedup. Expect: Generate (span explode) → Window "

@@ -37,9 +37,7 @@ SUSPECTS = [
     "udtf_tokenize_docs",
     "text_winnow_fingerprint",
     "span_dedup_corpus",          # flagged 3× in r5 full runs, always wobble
-    "q16_supplier_part_counts",   # band 0.79-1.37 across 12 pins
     "neardup_split_leakage",      # in-run spikes, isolated == committed
-    "stats_aggregates_lineitem",
     "semantic_dedup_corpus",      # cold pair-memo rep lands in full runs
 ]
 REPS = 5
