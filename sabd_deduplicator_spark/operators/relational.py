@@ -330,128 +330,6 @@ def cross_join_region_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Aggregations
 # ---------------------------------------------------------------------------
 
-_DISC_PRICE = (
-    "CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l_discount AS DECIMAL(12,2))"
-)
-_CHARGE = _DISC_PRICE + " * CAST(1 + l_tax AS DECIMAL(12,2))"
-
-# --- base-1e6 limb split: overflow-proof long aggregation -------------------
-# A non-negative long v < 2^53 splits as v = hi·1e12 + mid·1e6 + lo with each
-# limb < 1e6, so per-limb long SUMS stay under 2^63 up to ~9e12 rows per
-# group; the limb sums recombine exactly in decimal(38,0) post-aggregation.
-# Property-tested against Python int arithmetic in tests/test_plans.py.
-_LIMB = 10**6  # plain int: F.lit at module import would need a live context
-
-
-def _limbs(col: F.Column) -> tuple[F.Column, F.Column, F.Column]:
-    lo = F.pmod(col, F.lit(_LIMB)).cast("long")
-    rest = ((col - lo) / F.lit(_LIMB)).cast("long")  # exact: col < 2^53
-    mid = F.pmod(rest, F.lit(_LIMB)).cast("long")
-    hi = ((rest - mid) / F.lit(_LIMB)).cast("long")
-    return lo, mid, hi
-
-
-def _recombine_limb_sums(prefix: str) -> F.Column:
-    # decimal(38,0) is exact here: real magnitudes are ≤ ~1e17·sf ≪ 1e38
-    return (
-        F.col(f"{prefix}_hi").cast("decimal(38,0)") * F.lit(10**12)
-        + F.col(f"{prefix}_mid").cast("decimal(38,0)") * F.lit(_LIMB)
-        + F.col(f"{prefix}_lo").cast("decimal(38,0)")
-    )
-
-
-@query(
-    "q1_pricing_summary",
-    oracle=(
-        "SELECT l_returnflag, l_linestatus, "
-        + dsum_sql("l_quantity")
-        + " AS sum_qty, "
-        + dsum_sql("l_extendedprice")
-        + " AS sum_base_price, "
-        f"CAST(sum({_DISC_PRICE}) AS DOUBLE) AS sum_disc_price, "
-        f"CAST(sum({_CHARGE}) AS DOUBLE) AS sum_charge, "
-        "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(l_quantity) AS avg_qty, "
-        "CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(l_discount) AS avg_disc, "
-        "count(*) AS count_order "
-        "FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-01' "
-        "GROUP BY l_returnflag, l_linestatus"
-    ),
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q1-style pricing summary (SURVEY.md §2.C) — the canonical
-    wide-aggregate: one scan, partial+final hash agg, all row-level
-    arithmetic EXACT but in LONG CENTS rather than decimals: decimal-typed
-    sums ran this query at a stable 2.7 s vs 0.5 s for primitive sums at
-    sf0.1 (Decimal aggregation buffers fall out of the fast codegen path).
-    Every 2-dp input scales exactly to integer cents; products carry scale
-    4/6 as integer "basis points" (max |sum| ≈ 7e16 < 2^63). The single
-    long→double rounding happens POST-aggregation through an exact decimal
-    shift (`CAST(sum AS DECIMAL(38,0)) / 10^k` is exact decimal division,
-    then one cast), so the final doubles are the correctly-rounded values of
-    the same rationals the oracle's decimal pipeline produces — bit-identical
-    under the parity harness's float.hex comparison."""
-    l = table(spark, sf_dir, "lineitem")
-    qty_c = F.round(F.col("l_quantity") * 100).cast("long")
-    ext_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
-    disc1_c = F.round((F.lit(1) - F.col("l_discount")) * 100).cast("long")
-    tax1_c = F.round((F.lit(1) + F.col("l_tax")) * 100).cast("long")
-
-    def shift(sum_col: F.Column, k: int) -> F.Column:
-        # exact post-agg descale: long → decimal (exact) → /10^k (exact
-        # decimal division, scale ≥ 6) → double (the one rounding)
-        return (sum_col.cast("decimal(38,0)") / F.lit(10 ** k)).cast("double")
-
-    # Scale guard (advisor, round 4): sum(ext_c*disc1_c*tax1_c) accumulates
-    # ~1.5e17 per sf of lineitem, so a single long accumulator wraps around
-    # sf 30-40. Widening the aggregation itself to decimal costs the
-    # measured 5× per input row, and a two-stage (per-partition, then
-    # decimal merge) agg costs a second Exchange — so instead each product
-    # is split into three base-1e6 LIMBS summed independently as longs:
-    # every limb is < 1e6, so a limb sum stays under 2^63 up to ~9e12 rows
-    # per group (≈ sf 6,000,000), and the limbs recombine EXACTLY in
-    # decimal(38,0) post-aggregation (hi·1e12 + mid·1e6 + lo). Per-row
-    # products are < ~1.2e11 ≪ 2^53, so limb extraction's double division
-    # is exact. Plan shape is unchanged: one scan, one Exchange, long-only
-    # partial AND final sums (gated in tests/test_plans.py). The plain cent
-    # columns stay single long sums (qty_c < 5e3·100, ext_c < 1.1e7: safe
-    # past sf 5e5 ≈ 350 TB of lineitem).
-    dp_lo, dp_mid, dp_hi = _limbs(ext_c * disc1_c)
-    ch_lo, ch_mid, ch_hi = _limbs(ext_c * disc1_c * tax1_c)
-    recombine = _recombine_limb_sums
-    agged = (
-        l.filter(F.col("l_shipdate") <= F.lit("2001-09-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty_c).alias("qty_c"),
-            F.sum(ext_c).alias("ext_c"),
-            F.sum(dp_lo).alias("dp_lo"),
-            F.sum(dp_mid).alias("dp_mid"),
-            F.sum(dp_hi).alias("dp_hi"),
-            F.sum(ch_lo).alias("ch_lo"),
-            F.sum(ch_mid).alias("ch_mid"),
-            F.sum(ch_hi).alias("ch_hi"),
-            F.sum(disc_c).alias("disc_c"),
-            F.count("l_quantity").alias("n_qty"),
-            F.count("l_discount").alias("n_disc"),
-            F.count("*").alias("count_order"),
-        )
-        .withColumn("disc_price_c", recombine("dp"))
-        .withColumn("charge_c", recombine("ch"))
-    )
-    return agged.select(
-        "l_returnflag",
-        "l_linestatus",
-        shift(F.col("qty_c"), 2).alias("sum_qty"),
-        shift(F.col("ext_c"), 2).alias("sum_base_price"),
-        shift(F.col("disc_price_c"), 4).alias("sum_disc_price"),
-        shift(F.col("charge_c"), 6).alias("sum_charge"),
-        (shift(F.col("qty_c"), 2) / F.col("n_qty")).alias("avg_qty"),
-        (shift(F.col("disc_c"), 2) / F.col("n_disc")).alias("avg_disc"),
-        "count_order",
-    )
-
-
 @query(
     "rollup_orders",
     oracle=(
@@ -707,68 +585,6 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (val - F.lag(val).over(w)).cast("double").alias("delta_prev"),
         F.lead("event_type").over(w).alias("next_type"),
-    )
-
-
-@query(
-    "q3_shipping_priority",
-    oracle=(
-        # classic TPC-H Q3 shape: 3-way join, filtered build sides, revenue
-        # agg, deterministic top-10 via rank over (revenue desc, orderkey)
-        "SELECT o_orderkey, revenue, order_date, o_orderpriority FROM ("
-        "  SELECT o_orderkey, revenue, order_date, o_orderpriority, "
-        "         RANK() OVER (ORDER BY revenue DESC, o_orderkey) AS rnk FROM ("
-        "    SELECT l.l_orderkey AS o_orderkey, "
-        f"           CAST(sum({_DISC_PRICE}) AS DOUBLE) AS revenue, "
-        "           strftime(o.o_orderdate, '%Y-%m-%d') AS order_date, "
-        "           o.o_orderpriority "
-        "    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey "
-        "    JOIN customer c ON o.o_custkey = c.c_custkey "
-        "    WHERE c.c_mktsegment = 'BUILDING' AND o.o_orderstatus = 'O' "
-        "    GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority)"
-        ") WHERE rnk <= 10"
-    ),
-)
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q3-style: selective dimension filters reach the scans, the
-    lineitem fact joins pre-filtered orders (broadcast after filtering),
-    revenue in exact decimals, tie-stable top-10.
-
-    Top-10 is the k-th-value-prefilter plan (same rewrite as
-    topk_customers_by_spend): TakeOrderedAndProject finds the 10th revenue,
-    a broadcast join keeps only rows at or above it, and the rank window
-    sees a handful of survivors — never the full post-agg order stream on
-    one partition."""
-    l = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
-    c = table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    ).select("c_custkey")
-    ext = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc1 = (F.lit(1) - F.col("l_discount")).cast("decimal(12,2)")
-    rev = (
-        l.join(broadcast(o.join(broadcast(c), o.o_custkey == c.c_custkey)),
-               l.l_orderkey == F.col("o_orderkey"))
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(ext * disc1).cast("double").alias("revenue"))
-    )
-    kth = (
-        rev.orderBy(F.desc("revenue"), "o_orderkey")
-        .limit(10)
-        .agg(F.min("revenue").alias("kth"))
-    )
-    survivors = rev.join(broadcast(kth), rev.revenue >= kth.kth)
-    # bounded global window: input is the k-th-value survivor set (<= 10 + ties)
-    w = Window.orderBy(F.desc("revenue"), "o_orderkey")
-    return (
-        survivors.withColumn("rnk", F.rank().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select(
-            "o_orderkey",
-            "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-            "o_orderpriority",
-        )
     )
 
 
@@ -1172,75 +988,8 @@ def date_funcs_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Outer-join distribution, correlated subquery, arg-min/max, distribution
-# windows, unpivot
+# Arg-min/max, distribution windows, unpivot
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "q13_order_count_distribution",
-    oracle=(
-        # TPC-H Q13 shape: outer join keeps zero-order customers, two-level agg
-        "SELECT order_count, CAST(count(*) AS BIGINT) AS num_customers FROM ("
-        "  SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS order_count "
-        "  FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey "
-        "  GROUP BY c.c_custkey"
-        ") GROUP BY order_count"
-    ),
-)
-def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q13-style: LEFT join so customers with zero orders survive
-    (count(o_orderkey) ignores the null-extended rows), then a histogram of
-    per-customer order counts. Two aggregations; the second is tiny (distinct
-    counts), so only the first shuffles real data — keyed on c_custkey, which
-    is near-uniform, no skew handling needed."""
-    c = table(spark, sf_dir, "customer").select("c_custkey")
-    o = table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("order_count"))
-    )
-    return per_cust.groupBy("order_count").agg(
-        F.count("*").alias("num_customers")
-    )
-
-
-@query(
-    "q17_small_quantity_revenue",
-    oracle=(
-        # correlated scalar subquery (avg qty per part) — decorrelates to an
-        # aggregate + join; quantities are integral doubles so avg is exact
-        "SELECT p.p_brand, " + dsum_sql("l.l_extendedprice") + " AS revenue, "
-        "CAST(count(*) AS BIGINT) AS n "
-        "FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey "
-        "WHERE l.l_quantity < (SELECT 0.5 * avg(l2.l_quantity) "
-        "                      FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey) "
-        "GROUP BY p.p_brand"
-    ),
-)
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q17-style correlated scalar subquery, written decorrelated (the
-    form Catalyst rewrites to anyway): per-part avg quantity in one hash agg,
-    join back on l_partkey, filter, aggregate by brand. Both the avg-agg and
-    the probe shuffle on l_partkey — AQE coalesces; part is broadcast. avg of
-    integral doubles is exact (sum < 2^53), so the < predicate is
-    engine-stable; revenue uses the exact-decimal sum convention."""
-    l = table(spark, sf_dir, "lineitem")
-    p = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    avg_qty = l.groupBy("l_partkey").agg(
-        (F.sum("l_quantity") / F.count("l_quantity")).alias("__avg_qty")
-    )
-    return (
-        l.join(avg_qty, "l_partkey")
-        .filter(F.col("l_quantity") < 0.5 * F.col("__avg_qty"))
-        .join(broadcast(p), l.l_partkey == p.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            dsum("l_extendedprice").alias("revenue"),
-            F.count("*").alias("n"),
-        )
-    )
 
 
 @query(
@@ -1352,68 +1101,6 @@ def range_frame_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(w)
         .cast("double")
         .alias("nearby_sum"),
-    )
-
-
-@query(
-    "q21_sole_late_supplier",
-    oracle=(
-        # TPC-H Q21 shape: EXISTS (another supplier in the order) AND
-        # NOT EXISTS (another LATE supplier) — chained semi + anti join.
-        # "late" = shipped >60 days after the order date.
-        "WITH late AS ("
-        "  SELECT DISTINCT l.l_orderkey, l.l_suppkey "
-        "  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey "
-        "  WHERE l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY), "
-        "all_pairs AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem) "
-        "SELECT s.s_name, CAST(count(*) AS BIGINT) AS numwait "
-        "FROM late c JOIN supplier s ON c.l_suppkey = s.s_suppkey "
-        "WHERE EXISTS (SELECT 1 FROM all_pairs o WHERE o.l_orderkey = c.l_orderkey "
-        "              AND o.l_suppkey <> c.l_suppkey) "
-        "  AND NOT EXISTS (SELECT 1 FROM late l3 WHERE l3.l_orderkey = c.l_orderkey "
-        "                  AND l3.l_suppkey <> c.l_suppkey) "
-        "GROUP BY s.s_name"
-    ),
-)
-def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q21-style chained subqueries: suppliers who were the ONLY late
-    shipper in a multi-supplier order. EXISTS → left_semi on a non-equi pair
-    condition, NOT EXISTS → left_anti on the same shape — both shuffle on
-    l_orderkey (same key, so the exchange is reused), supplier dim broadcast.
-    Distinct (order, supplier) pairs first, so each order counts once per
-    supplier regardless of line count."""
-    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    late = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .filter(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    all_pairs = l.select(
-        F.col("l_orderkey").alias("p_orderkey"),
-        F.col("l_suppkey").alias("p_suppkey"),
-    ).distinct()
-    late3 = late.select(
-        F.col("l_orderkey").alias("x_orderkey"),
-        F.col("l_suppkey").alias("x_suppkey"),
-    )
-    cand = late.join(
-        all_pairs,
-        (F.col("l_orderkey") == F.col("p_orderkey"))
-        & (F.col("l_suppkey") != F.col("p_suppkey")),
-        "left_semi",
-    ).join(
-        late3,
-        (F.col("l_orderkey") == F.col("x_orderkey"))
-        & (F.col("l_suppkey") != F.col("x_suppkey")),
-        "left_anti",
-    )
-    return (
-        cand.join(broadcast(s), cand.l_suppkey == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
     )
 
 
@@ -1606,192 +1293,8 @@ def string_funcs2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TPC-H-style joins/aggregations #2 (Q5/Q14/Q18/Q19 shapes on available cols)
+# Data-quality filters
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "q5_local_supplier_volume",
-    oracle=(
-        # Q5 shape: revenue from lineitems where the supplier and the
-        # ordering customer share a nation, within one region and year.
-        "SELECT n_name, " + f"CAST(sum({_DISC_PRICE}) AS DOUBLE)" + " AS revenue "
-        "FROM customer c, orders o, lineitem l, supplier s, nation n, region r "
-        "WHERE c.c_custkey = o.o_custkey AND l.l_orderkey = o.o_orderkey "
-        "AND l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey "
-        "AND s.s_nationkey = n.n_nationkey AND n.n_regionkey = r.r_regionkey "
-        "AND r.r_name = 'ASIA' "
-        "AND o.o_orderdate >= TIMESTAMP '1996-01-01' "
-        "AND o.o_orderdate < TIMESTAMP '1997-01-01' "
-        "GROUP BY n_name"
-    ),
-)
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q5-style local-supplier volume. Join strategy for 100 TB: every
-    dimension chain (region→nation→supplier, customer) broadcasts onto the
-    facts, so the ONLY shuffle is the lineitem⋈orders fact-fact join on
-    l_orderkey; the same-nation predicate rides that join as a residual
-    equi-condition instead of a second shuffle."""
-    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = table(spark, sf_dir, "nation").join(
-        broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
-    )
-    s = table(spark, sf_dir, "supplier").join(
-        broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
-    ).select("s_suppkey", "s_nationkey", "n_name")
-    o = (
-        table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= "1996-01-01")
-            & (F.col("o_orderdate") < "1997-01-01")
-        )
-        .join(broadcast(table(spark, sf_dir, "customer")),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .select("o_orderkey", "c_nationkey")
-    )
-    l = table(spark, sf_dir, "lineitem").join(
-        broadcast(s), F.col("l_suppkey") == F.col("s_suppkey")
-    )
-    ext = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc1 = (F.lit(1) - F.col("l_discount")).cast("decimal(12,2)")
-    return (
-        l.join(
-            o,
-            (F.col("l_orderkey") == F.col("o_orderkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .groupBy("n_name")
-        .agg(F.sum(ext * disc1).cast("double").alias("revenue"))
-    )
-
-
-@query(
-    "q14_promo_revenue",
-    oracle=(
-        # Q14 shape: promo revenue share over a ship-date window. The CASE
-        # rides INSIDE the price factor so both branches stay exact decimal.
-        "SELECT CAST(100.00 * sum(CAST(CASE WHEN p_type = 'PROMO' "
-        "THEN l_extendedprice ELSE 0 END AS DECIMAL(12,2)) "
-        "* CAST(1 - l_discount AS DECIMAL(12,2))) AS DOUBLE) "
-        f"/ CAST(sum({_DISC_PRICE}) AS DOUBLE) AS promo_share "
-        "FROM lineitem l, part p WHERE l.l_partkey = p.p_partkey "
-        "AND l.l_shipdate >= TIMESTAMP '1996-01-01' "
-        "AND l.l_shipdate < TIMESTAMP '1996-04-01'"
-    ),
-)
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q14-style promo revenue share: part broadcasts onto the
-    ship-date-pruned lineitem scan (filter reaches the parquet scan), one
-    hash aggregate, zero fact shuffles."""
-    l = table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
-    )
-    p = table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    j = l.join(broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-    promo_price = F.when(
-        F.col("p_type") == "PROMO", F.col("l_extendedprice")
-    ).otherwise(F.lit(0)).cast("decimal(12,2)")
-    ext = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc1 = (F.lit(1) - F.col("l_discount")).cast("decimal(12,2)")
-    return j.agg(
-        (
-            (F.lit(100.00) * F.sum(promo_price * disc1).cast("double"))
-            / F.sum(ext * disc1).cast("double")
-        ).alias("promo_share")
-    )
-
-
-@query(
-    "q18_large_quantity_orders",
-    oracle=(
-        # Q18 shape: orders whose total line quantity exceeds a threshold,
-        # with their customer. HAVING on the exact decimal sum.
-        "SELECT c_name, c_custkey, o_orderkey, "
-        "strftime(o_orderdate, '%Y-%m-%d') AS order_date, o_totalprice, total_qty "
-        "FROM (SELECT l_orderkey, "
-        "CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS total_qty "
-        "FROM lineitem GROUP BY l_orderkey "
-        "HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 200) big "
-        "JOIN orders ON o_orderkey = l_orderkey "
-        "JOIN customer ON c_custkey = o_custkey"
-    ),
-)
-def q18_large_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q18-style large-volume orders: the quantity rollup shuffles
-    lineitem once on l_orderkey, the HAVING prunes it to a sliver, and that
-    sliver joins orders (shuffle, but both sides now small-keyed) and a
-    broadcast customer dimension."""
-    l = table(spark, sf_dir, "lineitem")
-    big = (
-        l.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("q"))
-        .filter(F.col("q") > 200)
-        .select("l_orderkey", F.col("q").cast("double").alias("total_qty"))
-    )
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-            "o_totalprice",
-            "total_qty",
-        )
-    )
-
-
-@query(
-    "q19_band_or_revenue",
-    oracle=(
-        # Q19 shape: disjunction of brand/size/quantity bands — the classic
-        # OR-of-ANDs predicate that must still evaluate as one pass.
-        f"SELECT CAST(sum({_DISC_PRICE}) AS DOUBLE) AS revenue, count(*) AS n_lines "
-        "FROM lineitem l, part p WHERE l.l_partkey = p.p_partkey AND ("
-        "(p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11) "
-        "OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20) "
-        "OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30))"
-    ),
-)
-def q19_band_or_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q19-style discounted revenue under an OR of band predicates.
-    The part side prunes to the three brands BEFORE broadcasting (derived
-    from the disjunction), so the broadcast build is a sliver and the
-    residual OR evaluates during the join — single scan of each side."""
-    bands = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(1, 5)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#23")
-            & F.col("p_size").between(1, 10)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#34")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    p = table(spark, sf_dir, "part").filter(
-        F.col("p_brand").isin("Brand#12", "Brand#23", "Brand#34")
-    ).select("p_partkey", "p_brand", "p_size")
-    l = table(spark, sf_dir, "lineitem")
-    ext = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc1 = (F.lit(1) - F.col("l_discount")).cast("decimal(12,2)")
-    return (
-        l.join(broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .filter(bands)
-        .agg(
-            F.sum(ext * disc1).cast("double").alias("revenue"),
-            F.count("*").alias("n_lines"),
-        )
-    )
 
 
 @query(

@@ -405,8 +405,8 @@ def embedding_knn_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     division at the end), so cross-engine float drift cannot move a
     decile boundary: the decile order key (s/cnt, vec_id) is derived from
     exact integers identically in both dialects. The global ntile is a
-    total-order op BY SEMANTICS (rank deciles over the whole relation,
-    whitelisted as such in tools/plan_audit.py); at
+    total-order op BY SEMANTICS (same whitelist class as
+    percent_rank_cume_dist — rank deciles over the whole relation); at
     100 TB it runs as a range-partitioned rank over n doc-level rows,
     corpus-mass-reduced by the aggregate before it."""
     import math
@@ -2747,10 +2747,10 @@ def sketch_order_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplication into local window redundancy the codec can actually see —
     and the signature sort is a shuffle the write was going to pay
     anyway. The two row_number orderings ARE total-order ops (the query's
-    semantics — whitelisted like embedding_knn_density's decile);
-    everything else is the shingle/sketch machinery minhash_lsh_neardup
-    already pays, and the adjacency Jaccard join touches 2(n-1) pairs,
-    linear by construction. Signatures sort identically in both engines: each
+    semantics — whitelisted like percent_rank_cume_dist); everything else
+    is the shingle/sketch machinery minhash_lsh_neardup already pays,
+    and the adjacency Jaccard join touches 2(n-1) pairs, linear by
+    construction. Signatures sort identically in both engines: each
     min is taken over an order-isomorphic domain (hex string vs its
     integer value), and tuple lexicographic order preserves per-component
     isomorphism."""

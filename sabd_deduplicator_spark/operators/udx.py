@@ -147,9 +147,10 @@ def pandas_udaf_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-agg pandas UDF computing an exact median per group. Unlike
     built-in aggregates there is NO partial aggregation — every row of a group
     ships to one Python worker, so this is only safe when groups are bounded
-    (3 statuses here). At 100 TB use `percentile_approx` or pre-reduce;
-    linear-interpolation median on even counts matches DuckDB's `median`
-    bit-for-bit because both average the two middle doubles. (Grouped-agg pandas UDFs cannot be mixed with built-in
+    (3 statuses here). At 100 TB use `percentile_approx` (see
+    stats_aggregates_lineitem) or pre-reduce; linear-interpolation median on
+    even counts matches DuckDB's `median` bit-for-bit because both average the
+    two middle doubles. (Grouped-agg pandas UDFs cannot be mixed with built-in
     aggregates in one `agg` — [INVALID_PANDAS_UDF_PLACEMENT].)"""
     o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(

@@ -84,6 +84,13 @@ def read_schema_columns(df: DataFrame) -> list[str]:
     return cols
 
 
+def pushed_filters(df: DataFrame) -> str:
+    import re
+
+    plan = formatted_plan(df)
+    return "; ".join(m.group(1) for m in re.finditer(r"PushedFilters: \[([^\]]*)\]", plan))
+
+
 # --- auditable localCheckpoint ----------------------------------------------
 # localCheckpoint truncates lineage, so a downstream .explain shows only a
 # checkpoint scan — which would let a genuinely smelly plan hide from

@@ -52,6 +52,7 @@ def load_all_queries() -> None:
         lookups,
         minhash_index,
         multimodal,
+        relational,
         similarity,
         sketches,
         text,

@@ -23,8 +23,8 @@ REPO = Path(__file__).resolve().parent.parent
 
 # Partitioning-sensitive representatives of each query family: windowed
 # first-occurrence, global encode/recovery, iterative connected components,
-# banded joins (simhash + md5-minhash), ordered string reassembly, a
-# streaming drain, and the blob parity row. Set
+# banded joins (simhash + md5-minhash), ordered string reassembly, set ops
+# with bag semantics, a streaming drain, and the blob parity row. Set
 # SPARK_GRAFT_ADVERSARIAL_FULL=1 for all queries (~8 min).
 SUBSET = [
     "dedup_hash_links",
@@ -35,7 +35,10 @@ SUBSET = [
     "simhash_neardup_pairs",
     "encoded_file_roundtrip",
     "media_image_dims",
+    "set_ops_bag_semantics",
+    "window_first_last_frames",
     "streaming_dedup_distinct",
+    "approx_distinct_kmv",     # rank-to-kth-hash: exactly the order-sensitive shape
     "media_feature_extract",   # Arrow kernel vs SQL byte stats, float-bit-exact
     "streaming_neardup_dedup", # cross-batch band-bucket state + per-row HOF sketch
     "doc_top_distinctive_terms",  # rank window with full tie-break chain

@@ -22,3 +22,8 @@ def test_oracle_parity(name, built_queries, duck):
     odf = duck.sql(registry.ORACLES[name]).df()
     ok, msg = compare(name, sdf, odf)
     assert ok, msg
+
+
+@pytest.mark.parametrize("name", sorted(set(registry.QUERIES) - set(registry.ORACLES)))
+def test_rows_only_queries_run(name, built_queries):
+    assert built_queries(name).count() >= 0

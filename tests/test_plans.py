@@ -11,6 +11,7 @@ from sabd_deduplicator_spark.plans.inspect import (
     formatted_plan,
     has_broadcast_join,
     has_row_python_udf,
+    pushed_filters,
     read_schema_columns,
 )
 
@@ -51,8 +52,6 @@ def test_winnow_is_single_arrow_eval(spark, sf_dir):
     assert "Exchange" not in plan  # narrow: no shuffle anywhere
 
 
-
-
 def test_multiprobe_lsh_is_partitioning_invariant(spark, sf_dir):
     """ann_lsh_topk's result must not depend on how the input happens to be
     partitioned (probe routing is per-row, bucket kernels sort candidates,
@@ -78,14 +77,22 @@ def test_multiprobe_lsh_is_partitioning_invariant(spark, sf_dir):
 
 
 def test_dimension_joins_broadcast(spark, sf_dir):
-    """The catalog's dimension-side joins must be broadcast: the fact side
+    """customer/nation/region joins must be broadcast: the orders fact table
     never shuffles for the join."""
+    assert has_broadcast_join(q("multi_join_revenue_by_nation", spark, sf_dir))
     assert has_broadcast_join(q("catalog_join", spark, sf_dir))
 
 
+def test_filter_pushdown_reaches_scan(spark, sf_dir):
+    pf = pushed_filters(q("filter_project_orders", spark, sf_dir))
+    assert "o_orderstatus" in pf and "o_totalprice" in pf
+
 
 def test_column_pruning(spark, sf_dir):
-    """A dedup scan must read only the document columns it uses."""
+    """A 4-column projection must not read the whole orders table."""
+    cols = set(read_schema_columns(q("filter_project_orders", spark, sf_dir)))
+    assert "o_orderpriority" in cols or len(cols) <= 5
+    assert "o_comment" not in cols  # not even present, but guard regardless
     cols_docs = set(read_schema_columns(q("dedup_first_occurrence", spark, sf_dir)))
     assert cols_docs <= {"doc_id", "text"}
 
@@ -98,6 +105,19 @@ def test_hash_links_single_shuffle(spark, sf_dir):
     assert "Window" not in formatted_plan(df)
 
 
+def test_asof_is_not_quadratic(spark, sf_dir):
+    """The as-of must be the union-window plan (one join-free window pass),
+    not a time-range join that multiplies rows per key."""
+    plan = formatted_plan(q("asof_latest_order_per_event", spark, sf_dir))
+    assert "Join" not in plan  # union + window only
+    assert "Window" in plan
+
+
+def test_band_join_is_equi_not_nested_loop(spark, sf_dir):
+    """Bucketed band join must hash-join on the bucket key; a
+    BroadcastNestedLoopJoin here would be the quadratic plan."""
+    plan = formatted_plan(q("range_join_close_prices", spark, sf_dir))
+    assert "NestedLoop" not in plan
 
 
 def test_minhash_stays_jvm_side_equi_joins(spark, sf_dir):
@@ -181,7 +201,9 @@ def test_spread_if_narrow_is_noop_on_wide_input(spark, sf_dir):
 @pytest.mark.parametrize(
     "name",
     [
+        "pivot_events_by_type",
         "dedup_hash_links",
+        "multi_join_revenue_by_nation",
         "dedup_refcount",
     ],
 )
@@ -198,6 +220,7 @@ def test_aggregates_stay_hash_based(name, spark, sf_dir):
     "name,max_exchanges",
     [
         ("dedup_refcount", 1),
+        ("multi_join_revenue_by_nation", 1),
         ("chunk_scan_fixed", 0),
         # CDC boundaries are per-row window hashes — zero shuffles of its
         # own; the 1 budget is catalog.spread_if_narrow's adaptive
@@ -260,7 +283,6 @@ def test_similarity_topk_has_no_global_window_over_corpus(spark, sf_dir):
     ], "window not fed by the kth-value prefilter join"
 
 
-
 def test_llm_pipeline_shapes(spark, sf_dir):
     """Corpus-build ops stay JVM-side and linear: pure-projection bucketing
     (split/mixture: zero or one exchange for the final agg), span dedup is
@@ -290,8 +312,6 @@ def test_llm_pipeline_shapes(spark, sf_dir):
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     data_windows = [s for s in specs if "doc_id" in s]
     assert data_windows and all("block" in s for s in data_windows), specs
-
-
 
 
 def test_source_overlap_pair_join_is_distinct_level(spark, sf_dir):

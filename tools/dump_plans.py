@@ -21,6 +21,24 @@ HEADLINERS = {
         "defense), HashAggregate not SortAggregate (packed-long ordinal), "
         "no Window."
     ),
+    "filter_project_orders": (
+        "Scan hygiene. Expect: PushedFilters carrying o_orderstatus/"
+        "o_totalprice, ReadSchema limited to the 4 projected columns."
+    ),
+    "multi_join_revenue_by_nation": (
+        "Dimension joins. Expect: BroadcastHashJoin ×3 (customer/nation/"
+        "region), the orders fact never shuffles for the join; a single "
+        "Exchange for the final aggregation."
+    ),
+    "asof_latest_order_per_event": (
+        "Union-window as-of. Expect: Union + one Exchange + Window with "
+        "last(ignorenulls); NO join operator anywhere."
+    ),
+    "range_join_close_prices": (
+        "Bucketed band join. Expect: equi SortMergeJoin/ShuffledHashJoin on "
+        "`bucket` with the ±0.5 band as residual condition; no "
+        "BroadcastNestedLoopJoin."
+    ),
     "roundtrip_recovery": (
         "Recovery. Expect: literals ∪ (pointers ⋈ literals) — one join on "
         "(file, line), no positional re-scan structure."

@@ -66,12 +66,14 @@ def _global_windows(plan: str) -> int:
 
 # (query, smell) -> why it is the RIGHT plan there. Every BNLJ below has a
 # one-row (scalar threshold / k-th value) or block-descriptor build side —
-# linear, not quadratic; the profiling SortAggregates are min/max over
-# STRING columns (lexicographic result — no numeric isomorphism applies).
+# linear, not quadratic; every Expand is the grouping-set/unpivot operator
+# semantics; the profiling SortAggregates are min/max over STRING columns
+# (lexicographic result — no numeric isomorphism applies).
 EXPECTED: dict[tuple[str, str], str] = {
     ("ann_ivf_topk", "BroadcastNestedLoopJoin"): "1-row kth-value prefilter",
     ("ann_jl_rerank_topk", "BroadcastNestedLoopJoin"): "1-row query-sketch / kth-value / query-vector broadcasts",
     ("ann_recall_vs_exact", "BroadcastNestedLoopJoin"): "1-row kth-value prefilter",
+    ("cross_join_region_status", "BroadcastNestedLoopJoin"): "the query IS a cross join (tiny dims)",
     ("bpe_first_merges", "BroadcastNestedLoopJoin"): "1-row kth-value prefilter",
     ("dedup_bloom_prefilter", "BroadcastNestedLoopJoin"): "1-row n_build scalar cross join",
     ("doc_bigram_logprob", "BroadcastNestedLoopJoin"): "1-row vocabulary-size scalar cross join (r11: was a sequential driver .first() job)",
@@ -84,7 +86,12 @@ EXPECTED: dict[tuple[str, str], str] = {
     ("similarity_topk_cosine", "BroadcastNestedLoopJoin"): "1-row kth-value prefilter (per stage)",
     ("text_bm25_topk", "BroadcastNestedLoopJoin"): "1-row corpus-stats broadcast + 1-row kth-value prefilter",
     ("top_tokens_corpus", "BroadcastNestedLoopJoin"): "1-row kth-value prefilter",
+    ("topk_customers_by_spend", "BroadcastNestedLoopJoin"): "1-row kth-value prefilter",
     ("vocab_coverage_curve", "BroadcastNestedLoopJoin"): "1-row kth-value prefilter",
+    ("cube_events", "Expand"): "CUBE is the Expand operator",
+    ("rollup_orders", "Expand"): "ROLLUP is the Expand operator",
+    ("grouping_sets_lineitem", "Expand"): "GROUPING SETS is the Expand operator",
+    ("unpivot_part_metrics", "Expand"): "UNPIVOT is the Expand operator",
     ("table_profile_orders", "SortAggregate"): "min/max over STRING columns (lexicographic result wanted)",
     # --- bounded global windows (the `WindowExec: No Partition Defined`
     # warning is OWNED here, not ambient): every entry below ranks the
@@ -99,15 +106,18 @@ EXPECTED: dict[tuple[str, str], str] = {
     ("top_tokens_corpus", GLOBAL_WINDOW): "ranks k-th-value survivors (≤ 50 + ties)",
     ("minhash_index_staleness", "BroadcastNestedLoopJoin"): "1-row kth-value prefilter",
     ("minhash_index_staleness", GLOBAL_WINDOW): "ranks k-th-value survivors (≤ 100 + ties), then the 1-column rebuild verdict over the same ≤ 100-row monitored set",
+    ("topk_customers_by_spend", GLOBAL_WINDOW): "ranks k-th-value survivors (≤ 10 + ties)",
     ("vocab_coverage_curve", GLOBAL_WINDOW): "ranks k-th-value survivors (≤ k_max + ties)",
     # --- total-order semantics: the OPERATOR is a corpus-wide ranking ---
+    ("ntile_customer_deciles", GLOBAL_WINDOW): "ntile(10) over the whole table IS a total-order op; scale path = range-partitioned rank from sampled quantile boundaries",
+    ("percent_rank_cume_dist", GLOBAL_WINDOW): "percent_rank/cume_dist over the whole table IS a total-order op; same range-partitioned scale path",
     ("embedding_knn_density", "BroadcastNestedLoopJoin"): "tile grid (block descriptors)",
     ("minhash_band_tuning", "BroadcastNestedLoopJoin"): "1-row pooled-truth scalar cross join",
-    ("embedding_knn_density", GLOBAL_WINDOW): "density DECILE over all vectors IS a total-order op; input is one row per vector, corpus-mass-reduced by the top-k aggregate",
+    ("embedding_knn_density", GLOBAL_WINDOW): "density DECILE over all vectors IS a total-order op (same class as percent_rank_cume_dist); input is one row per vector, corpus-mass-reduced by the top-k aggregate",
     # --- smells inside localCheckpointed lineages (visible since the audit
     # captures pre-checkpoint plans — judge r6 #2; attribution = first
     # sorted query that builds the memoized lineage in this process) ---
-    ("sketch_order_locality", GLOBAL_WINDOW): "the two total-order row_numbers ARE the query's semantics (it audits a corpus sort order); one row per doc, runs once per corpus snapshot — same total-order class as embedding_knn_density's decile (in the checkpointed rank relation)",
+    ("sketch_order_locality", GLOBAL_WINDOW): "the two total-order row_numbers ARE the query's semantics (it audits a corpus sort order); one row per doc, runs once per corpus snapshot — same class as percent_rank_cume_dist (in the checkpointed rank relation)",
     ("ann_recall_vs_exact", GLOBAL_WINDOW): "checkpointed recall-memo lineages: ranks the bounded query sample (≤ RECALL_SAMPLE rows) and k-th-value survivor sets, never the corpus",
     ("semantic_dedup_corpus", "BroadcastNestedLoopJoin"): "checkpointed embedding-pair memo: upper-triangular tile grid (block descriptors) — same class as embedding_neardup_pairs",
 }

@@ -38,6 +38,7 @@ SUSPECTS = [
     "text_winnow_fingerprint",
     "span_dedup_corpus",          # flagged 3× in r5 full runs, always wobble
     "neardup_split_leakage",      # in-run spikes, isolated == committed
+    "stats_aggregates_lineitem",
     "semantic_dedup_corpus",      # cold pair-memo rep lands in full runs
 ]
 REPS = 5
