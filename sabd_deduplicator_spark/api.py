@@ -242,9 +242,12 @@ def build_training_corpus(
     3. deterministic md5-bucket train/val/test assignment (train_split_col).
 
     Returns the cleaned, labeled corpus (text = deduped reassembly, token
-    count recomputed on it) and the per-language survivorship funnel. All
-    stages are narrow transforms + two linear shuffles (the span window and
-    the reassembly aggregate); nothing touches the driver.
+    count recomputed on it) and the per-language survivorship funnel. The
+    span dedup costs three linear shuffles (span_survivorship: the min
+    aggregate, the keeper join and the per-doc reassembly). The cut stage
+    adds its own, the window-hash count and the per-document island window
+    among them (exactsubstr_cut's docstring gives its full shape). The
+    other stages are narrow; nothing touches the driver.
 
     Cost note (cut_repeated_spans=True): cut_census and the main clean_docs/
     report pipeline are SEPARATE actions over the same exactsubstr_cut

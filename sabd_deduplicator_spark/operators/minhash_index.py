@@ -82,10 +82,12 @@ Round-11 production posture:
   serve the consistent pre-publish view), and any publish that fails
   after a rename landed raises :class:`PartialPublishError` instead of
   silently serving a mixed component set.
-- The nightly verdict reads STATS, not the corpus: per-shingle df
-  contributions accumulate in ``df_stats/`` (build exact, appends
-  delta-sized, compaction re-derives) so the newly-hot term is a
-  vocabulary-sized sum, and the verdict is carried with the index (below).
+- The nightly verdict reads the index, not the corpus: hot df from
+  ``hot/`` plus ``hot_delta/``, stored df by aggregating ``shingles/``
+  (tombstoned docs subtracted), and the verdict is carried with the index
+  (below), so that aggregate runs only when the carry is stale. Each
+  stored shingle is kept once, in ``shingles/``: no per-shingle df table
+  is written.
 - Probe crowded-bucket SKIPS feed back: the per-ingest skip counts
   persist in ``probe_stats/`` and are themselves a rebuild signal
   (crowding IS staleness), and delta docs whose EVERY shared band was
@@ -162,10 +164,6 @@ class MinHashIndex:
         return os.path.join(self.index_dir, "hot_delta")
 
     @property
-    def df_stats_path(self) -> str:
-        return os.path.join(self.index_dir, "df_stats")
-
-    @property
     def probe_stats_path(self) -> str:
         return os.path.join(self.index_dir, "probe_stats")
 
@@ -210,25 +208,6 @@ class MinHashIndex:
             return spark.createDataFrame([], "sh string, df bigint")
         return spark.read.schema("sh string, df bigint").parquet(
             self.hot_delta_path
-        )
-
-    def df_stats(self, spark: SparkSession) -> DataFrame | None:
-        """Per-shingle df CONTRIBUTIONS for the stored (non-hot) shingles:
-        the build writes one exact (sh, df) relation, every append stages
-        its delta-sized contribution, compaction re-derives it exactly from
-        the compacted shingles. Summing it per sh gives the stored df
-        WITHOUT scanning the occurrence-sized shingles/ relation — the
-        vocabulary-sized stats surface the nightly staleness verdict reads
-        (judge r10 advice: the verdict's newly-hot term was a corpus-scale
-        groupBy per ingest). None when absent (pre-r11 index, or torn by a
-        crash mid-compaction swap) — callers fall back to the exact
-        shingles/ aggregate."""
-        import glob
-
-        if not glob.glob(os.path.join(self.df_stats_path, "*.parquet")):
-            return None
-        return spark.read.schema("sh string, df bigint").parquet(
-            self.df_stats_path
         )
 
     def probe_stats(self, spark: SparkSession) -> DataFrame:
@@ -455,9 +434,11 @@ def build_minhash_index(
 
     Two passes over the corpus scan (hot aggregate, then capped sketch) —
     the honest cost of a build job; probes and appends never re-pay it.
-    The staleness verdict's inputs are observed during the hot, sizes and
-    df_stats writes and carried with the index (see the module docstring),
-    so the first ingest starts from carried stats at no extra build job.
+    After the writes, the staleness verdict's inputs are derived from the
+    components exactly as a cold verdict derives them (one aggregate over
+    ``sizes/``, ``hot/`` and ``shingles/``, two Spark jobs) and carried with
+    the index (see the module docstring), so the first ingest starts from
+    carried stats.
     ``hot`` override: appends keep the frozen cap, so the
     rebuild-equivalence test (and any staged rebuild that must preserve an
     existing cap) can inject it; production builds leave it None.
@@ -483,14 +464,8 @@ def build_minhash_index(
             .agg(F.count("*").alias("df"))
             .filter(F.col("df") * 2 > F.lit(n_docs))
         )
-    # the staleness verdict's inputs are observed while the components they
-    # derive from are written (no extra job) and carried with the index
-    seen_hot, seen_sizes, seen_df = Observation(), Observation(), Observation()
     overwrite_parquet(
-        hot.select("sh", F.col("df").cast("long").alias("df")).observe(
-            seen_hot, F.collect_list(F.struct("sh", "df")).alias("rows")
-        ),
-        idx.hot_path,
+        hot.select("sh", F.col("df").cast("long").alias("df")), idx.hot_path
     )
     # everything downstream caps against the PERSISTED hot set, exactly the
     # relation probes will read — no lineage divergence possible
@@ -498,33 +473,7 @@ def build_minhash_index(
     overwrite_parquet(capped.select("doc_id", "sh"), idx.shingles_path)
     stored = idx.shingles(spark)
     overwrite_parquet(
-        stored.groupBy("doc_id")
-        .agg(F.count("*").alias("n"))
-        .observe(
-            seen_sizes,
-            F.count(F.lit(1)).alias("n"),
-            F.max("doc_id").alias("max_doc_id"),
-        ),
-        idx.sizes_path,
-    )
-    n_stored = seen_sizes.get["n"]
-    # exact per-shingle df of the stored (non-hot) shingles — the
-    # vocabulary-sized stats component the nightly staleness verdict sums
-    # instead of re-scanning the occurrence-sized shingles/ relation; each
-    # append stages its delta-sized contribution (see MinHashIndex.df_stats)
-    overwrite_parquet(
-        stored.groupBy("sh")
-        .agg(F.count("*").cast("long").alias("df"))
-        .observe(
-            seen_df,
-            F.collect_list(
-                F.when(F.col("df") * 2 > F.lit(n_stored), F.struct("sh", "df"))
-            ).alias("rows"),
-            F.max(F.when(F.col("df") * 2 <= F.lit(n_stored), F.col("df"))).alias(
-                "max_cold"
-            ),
-        ),
-        idx.df_stats_path,
+        stored.groupBy("doc_id").agg(F.count("*").alias("n")), idx.sizes_path
     )
     save_bucketed_table(
         minhash_bands(stored),
@@ -533,18 +482,9 @@ def build_minhash_index(
         n_buckets=n_buckets,
         path=bands_path or os.path.join(index_dir, "bands"),
     )
-    _write_carry(
-        idx,
-        _carry_token(idx),
-        verdict={
-            "n_docs": n_stored,
-            "hot_df": {r["sh"]: r["df"] for r in seen_hot.get["rows"]},
-            "newly_hot_df": {r["sh"]: r["df"] for r in seen_df.get["rows"]},
-            "max_cold_df": seen_df.get["max_cold"] or 0,
-            "n_skips": 0,
-        },
-        max_doc_id=seen_sizes.get["max_doc_id"],
-    )
+    # carry the verdict inputs now, through the same derivation a cold
+    # verdict uses, so the first ingest starts carried
+    _carried_verdict(spark, idx)
     return idx
 
 
@@ -658,8 +598,7 @@ def _occupancy_bound(spark: SparkSession, idx: MinHashIndex, cap: int) -> int:
 _CARRY_FILE = "_carried_stats.json"
 _CARRY_TMP = ".carry_tmp_"
 _CARRY_COMPONENTS = (
-    "bands*", "sizes", "df_stats", "hot", "hot_delta", "tombstones",
-    "probe_stats",
+    "bands*", "sizes", "hot", "hot_delta", "tombstones", "probe_stats",
 )
 
 
@@ -1090,6 +1029,7 @@ def _publish_rebuild(
         # crowded-bucket skip counts are spent — the rebuild IS the
         # correction the skip signal asks for
         shutil.rmtree(idx.probe_stats_path, ignore_errors=True)
+    _drop_legacy_df_stats(idx)
     staging_tbl = f"{idx.table_name}__rebuild_{batch}"
     if spark.catalog.tableExists(staging_tbl):
         _swap_band_table(spark, idx, staging_tbl, _crash)
@@ -1226,13 +1166,6 @@ def recover_minhash_index(
                 os.remove(tmp)
             except FileNotFoundError:
                 pass
-        for d in glob.glob(
-            os.path.join(idx.index_dir, ".df_stats_rw_*")
-        ) + glob.glob(os.path.join(idx.index_dir, ".df_stats_old_*")):
-            # a compaction that died mid df_stats rewrite: the staged/old
-            # copies are orphans (readers fall back to the exact shingles/
-            # aggregate while df_stats is absent)
-            shutil.rmtree(d, ignore_errors=True)
 
 
 def append_to_minhash_index(
@@ -1263,8 +1196,8 @@ def append_to_minhash_index(
        dot-prefixed, so every parquet reader ignores the lot — from ONE
        pinned relation derived from the batch's sketch, so no component can
        drift from what the shingles component will hold. Two writes: a
-       segment partitioned by component (shingles, sizes, df_stats,
-       hot_delta and, from probe_and_ingest, the probe-stats row), whose
+       segment partitioned by component (shingles, sizes, hot_delta and,
+       from probe_and_ingest, the probe-stats row), whose
        partitions are renamed into per-component staging directories; and
        the bands through the SAME bucketed writer (a staging catalog
        table, dropped immediately — external, files survive), so the staged
@@ -1315,7 +1248,7 @@ def append_to_minhash_index(
 
 
 # staged components written by the segment write (partition column "comp")
-_SEGMENT_COMPONENTS = ("shingles", "sizes", "df_stats", "hot_delta", "probe_stats")
+_SEGMENT_COMPONENTS = ("shingles", "sizes", "hot_delta", "probe_stats")
 _PROBE_STATS_COLS = ("n_oversized_buckets", "n_slow_path_docs", "bucket_cap")
 _STAGED_ROWS_PER_TASK = 1_000_000
 
@@ -1325,12 +1258,13 @@ def _staged_rows(
 ) -> DataFrame:
     """Every row the batch stages, as one pinned relation tagged by
     ``comp``: the capped shingles, the bands, and ONE aggregation that
-    yields sizes (per doc), df_stats and hot_delta (per shingle) plus the
-    batch's band-key occupancy (``occ``, stats only, never written).
-    ``obs`` collects, during the pinning job, what carrying the index's
-    stats forward needs: the staged doc count, the largest key occupancy,
-    the hot hits, and the df contributions of the shingles the carried
-    verdict tracks (and the largest of the others)."""
+    yields sizes (per doc) and hot_delta (per shingle) plus two tags that
+    are only observed, never pinned or written: the batch's per-shingle df
+    (``df``) and band-key occupancy (``occ``). ``obs`` collects, during
+    the pinning job, what carrying the index's stats forward needs: the
+    staged row and doc counts, the largest key occupancy, the hot hits,
+    and the df contributions of the shingles the carried verdict tracks
+    (and the largest of the others)."""
     null_long, null_str = F.lit(None).cast("long"), F.lit(None).cast("string")
     no_band = [
         F.lit(None).cast("int").alias("band"),
@@ -1348,7 +1282,7 @@ def _staged_rows(
         F.explode(
             F.when(F.col("hot"), F.array(key("hot_delta", null_long, sh)))
             .otherwise(
-                F.array(key("sizes", doc_id, null_str), key("df_stats", null_long, sh))
+                F.array(key("sizes", doc_id, null_str), key("df", null_long, sh))
             )
         ).alias("k")
     ).select("k.*", *no_band)
@@ -1375,11 +1309,12 @@ def _staged_rows(
         )
     )
     comp, c = F.col("comp"), F.col("c")
-    df_row = comp == "df_stats"
+    df_row = comp == "df"
+    staged = comp.isin(*_SEGMENT_COMPONENTS, "bands")
     tracked = sh.isin(pre_newly_hot) if pre_newly_hot else F.lit(False)
     return rows.observe(
         obs,
-        F.count(F.lit(1)).alias("rows"),
+        F.count(F.when(staged, 1)).alias("rows"),
         F.count(F.when(comp == "sizes", 1)).alias("n_docs"),
         F.max(F.when(comp == "sizes", doc_id)).alias("max_doc_id"),
         F.count(F.when(comp == "bands", 1)).alias("n_bands"),
@@ -1391,7 +1326,7 @@ def _staged_rows(
         F.collect_list(F.when(df_row & tracked, F.struct("sh", "c"))).alias(
             "tracked_df"
         ),
-    ).localCheckpoint()
+    ).filter(staged).localCheckpoint()
 
 
 def _write_tasks(n_rows: int) -> int:
@@ -1633,8 +1568,9 @@ def forget_from_minhash_index(
     the erased docs — pinned in tests/test_minhash_index.py.
 
     The frozen hot set is untouched: erasure leaves other docs' stored
-    band keys valid (the cap contract in the module docstring); the stored
-    df stats merely go stale for the rebuild monitor, same as appends.
+    band keys valid (the cap contract in the module docstring); the hot
+    shingles' df merely goes stale for the rebuild monitor (see
+    :func:`index_staleness_from_stats`, blind spot 1).
 
     A forgotten doc_id is RETIRED until the next compaction:
     append_to_minhash_index rejects it (the live tombstone would silently
@@ -1650,29 +1586,17 @@ def forget_from_minhash_index(
     )
 
 
-def _rewrite_df_stats(spark: SparkSession, idx: MinHashIndex) -> None:
-    """Re-derive the df_stats component exactly from the current shingles/
-    relation, swapping it in via hidden staging + two renames. A crash
-    between the renames leaves df_stats ABSENT, never torn — readers
-    (MinHashIndex.df_stats) fall back to the exact shingles/ aggregate,
-    and the next compaction rewrites it."""
+def _drop_legacy_df_stats(idx: MinHashIndex) -> None:
+    """Remove the per-shingle df table an index built by an older version
+    kept (``df_stats/``) and any staged or retired copy a crash left
+    behind. Nothing reads them: the verdict aggregates ``shingles/``."""
+    import glob
     import shutil
 
-    from sabd_deduplicator_spark.sources.writers import overwrite_parquet
-
-    tag = uuid.uuid4().hex[:8]
-    staged = os.path.join(idx.index_dir, f".df_stats_rw_{tag}")
-    retired = os.path.join(idx.index_dir, f".df_stats_old_{tag}")
-    overwrite_parquet(
-        idx.shingles(spark)
-        .groupBy("sh")
-        .agg(F.count("*").cast("long").alias("df")),
-        staged,
-    )
-    if os.path.isdir(idx.df_stats_path):
-        os.rename(idx.df_stats_path, retired)
-    os.rename(staged, idx.df_stats_path)
-    shutil.rmtree(retired, ignore_errors=True)
+    for d in glob.glob(os.path.join(idx.index_dir, "df_stats")) + glob.glob(
+        os.path.join(idx.index_dir, ".df_stats_*")
+    ):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 # --- registered query --------------------------------------------------------
@@ -1865,17 +1789,11 @@ def index_staleness_from_stats(spark: SparkSession, idx: MinHashIndex) -> dict:
 
     What the components make observable:
 
-    - non-hot shingles: every append stages its per-shingle df
-      contribution into ``df_stats/`` next to its other components (the
-      build writes the exact initial relation, compaction re-derives it
-      exactly), so SUMMING df_stats per shingle gives the stored df with a
-      VOCABULARY-sized scan — never the occurrence-sized ``shingles/``
-      relation (judge r10 advice: the old newly-hot term was a corpus-
-      scale groupBy per ingest). A shingle with summed df·2 > n is
-      ``newly_hot``: appends are not capping a shingle a fresh build would
-      cap, the crowding failure the cap exists to prevent. Fallback when
-      df_stats is absent (pre-r11 index, or mid-compaction crash): the
-      exact shingles/ aggregate.
+    - non-hot shingles: aggregating ``shingles/`` per shingle, with
+      tombstoned docs subtracted, gives the exact stored df. A shingle
+      with df·2 > n is ``newly_hot``: appends are not capping a shingle a
+      fresh build would cap, the crowding failure the cap exists to
+      prevent.
     - hot shingles: their post-build occurrences were stripped by the
       frozen cap before storage, so ``hot/`` (build-time df) PLUS the
       ``hot_delta/`` contributions each append stages alongside its other
@@ -1891,32 +1809,30 @@ def index_staleness_from_stats(spark: SparkSession, idx: MinHashIndex) -> dict:
 
     Known blind spots (documented, monitor is advisory — the registered,
     oracle-checked :func:`minhash_index_staleness` against the live corpus
-    is the precise nightly check): (1) forgotten docs' contributions can't
-    be subtracted from the stats side-tables (tombstones carry no shingle
-    info), so hot df AND df_stats overcount until compaction/rebuild
-    re-derives them — the safe direction: at worst a rebuild is
-    recommended early, and the rebuild is itself the correction; (2) n
+    is the precise nightly check): (1) forgotten docs' hot-shingle
+    occurrences can't be subtracted from ``hot/`` and ``hot_delta/`` (the
+    cap stripped them from ``shingles/``, and tombstones carry no shingle
+    info), so hot df overcounts until a rebuild refreezes it — a forget
+    can only hide a cooling, never fake one, and probe answers stay exact
+    meanwhile; (2) n
     counts docs with ≥1 stored shingle — a doc whose every shingle is hot
     stores no rows anywhere and is invisible to the whole index, probes
     included, so excluding it from the denominator is self-consistent.
 
     Cost: the inputs are CARRIED in the index directory, keyed by the
-    index state token — the build observes them during its own writes, and
+    index state token — the build derives them once after its writes, and
     an append that found carried inputs advances them from its batch's own
     stats (_advance_carry) — so a verdict on an unchanged or appended-to
     index reads one small file and runs no Spark job, in any process. Only
     when the carried inputs are missing (after a forget, compact or
-    rebuild, or a crash before the carry was written) does one stats-sized
-    query recompute them — one aggregate and one ordered top-K fetch, two
-    Spark jobs, never a corpus-sized pass; see :func:`_verdict_inputs` —
-    and carry the result. On a read-only mount the carry cannot be
-    written, so every such verdict recomputes."""
-    token = _carry_token(idx)
-    inputs = _read_carry(idx, token).get("verdict")
-    if inputs is None:
-        inputs = _verdict_inputs(spark, idx)
-        max_doc_id = inputs.pop("max_doc_id")
-        _write_carry(idx, token, verdict=inputs, max_doc_id=max_doc_id)
+    rebuild, or a crash before the carry was written) does one query
+    recompute them — one aggregate and one ordered top-K fetch, two Spark
+    jobs; see :func:`_verdict_inputs` — and carry the result. That
+    aggregate reads the occurrence-sized ``shingles/`` (never the corpus
+    text); a compaction or rebuild has just passed over all of it anyway.
+    On a read-only mount the carry cannot be written, so every such
+    verdict recomputes."""
+    inputs = _carried_verdict(spark, idx)
     n = inputs["n_docs"]
     n_cooled = sum(2 * df <= n for df in inputs["hot_df"].values())
     n_newly_hot = len(inputs["newly_hot_df"])
@@ -1930,6 +1846,18 @@ def index_staleness_from_stats(spark: SparkSession, idx: MinHashIndex) -> dict:
     }
 
 
+def _carried_verdict(spark: SparkSession, idx: MinHashIndex) -> dict:
+    """The staleness verdict's inputs for the current index state: the
+    carried ones, else recomputed from the components and carried."""
+    token = _carry_token(idx)
+    inputs = _read_carry(idx, token).get("verdict")
+    if inputs is None:
+        inputs = _verdict_inputs(spark, idx)
+        max_doc_id = inputs.pop("max_doc_id")
+        _write_carry(idx, token, verdict=inputs, max_doc_id=max_doc_id)
+    return inputs
+
+
 _VERDICT_TOP_ROWS = 4096
 
 
@@ -1939,7 +1867,9 @@ def _verdict_inputs(spark: SparkSession, idx: MinHashIndex) -> dict:
     the stored shingles over the df·2 > n threshold with their df, the
     largest df below it, and the skip count.
 
-    One aggregation over every stats row, tagged by component, then one
+    One aggregation over the live sizes, the hot and hot_delta rows, the
+    skip counts and the live stored shingle occurrences (one row each, so
+    the df is exact after a forget), tagged by component, then one
     ordered top-K fetched as a single row: the per-component totals and hot
     rows first, then the stored df rows from the largest down. The
     df·2 > n rows are a prefix of that order, so the fetch is complete once
@@ -1949,12 +1879,9 @@ def _verdict_inputs(spark: SparkSession, idx: MinHashIndex) -> dict:
     sizes = idx.sizes(spark)
     if tomb is not None:
         sizes = sizes.join(tomb, "doc_id", "left_anti")
-    dfs = idx.df_stats(spark)
-    if dfs is None:
-        dfs = idx.shingles(spark)
-        if tomb is not None:
-            dfs = dfs.join(tomb, "doc_id", "left_anti")
-        dfs = dfs.select("sh", F.lit(1).cast("long").alias("df"))
+    stored = idx.shingles(spark)
+    if tomb is not None:
+        stored = stored.join(tomb, "doc_id", "left_anti")
 
     def tagged(df: DataFrame, tag: str, sh, v, top=None) -> DataFrame:
         return df.select(
@@ -1972,7 +1899,7 @@ def _verdict_inputs(spark: SparkSession, idx: MinHashIndex) -> dict:
         .unionByName(
             tagged(idx.probe_stats(spark), "skip", no_sh, F.col("n_oversized_buckets"))
         )
-        .unionByName(tagged(dfs, "df", F.col("sh"), F.col("df")))
+        .unionByName(tagged(stored, "df", F.col("sh"), F.lit(1)))
         .groupBy("tag", "sh")
         .agg(F.sum("v").alias("v"), F.max("top").alias("top"))
         .orderBy((F.col("tag") == "df").asc(), F.desc("v"))
@@ -2176,12 +2103,7 @@ def _compact_under_lease(
     )
     compact_parquet(spark, idx.shingles_path, transform=drop_tomb)
     compact_parquet(spark, idx.sizes_path, transform=drop_tomb)
-    # df_stats is an AGGREGATE of shingles (one row per sh), so a per-file
-    # compact/anti-join cannot maintain it — re-derive it exactly from the
-    # just-compacted shingle relation (tombstones now physically applied,
-    # so the post-compaction stats are exact again, clearing the
-    # overcounting blind spot appends accumulate)
-    _rewrite_df_stats(spark, idx)
+    _drop_legacy_df_stats(idx)
     if glob.glob(os.path.join(idx.hot_delta_path, "*.parquet")):
         # the stats side-table accretes one file set per append too; no
         # tombstone transform — it has no doc_id (contributions of

@@ -101,6 +101,14 @@ def get_spark(app_name: str = "sabd-dedup-spark") -> SparkSession:
         # UDTFs eval via Arrow batches (ArrowEvalPythonUDTF), not row pickling
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # generated-code cache, 100 classes by default: one corpus ingest
+        # (index build + probe_and_ingest) compiles about 150, so each later
+        # ingest in the process recompiled all of them (measured at seed 1
+        # on 4 cores: 151 classes, 1.0-1.1 s of compile time per operation;
+        # 0-2 classes with a larger cache). 1000 holds several operations'
+        # plans. A static conf: it applies when the JVM's first session
+        # starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", default_driver_memory())
     )

@@ -978,3 +978,119 @@ def test_carried_stats_equal_cold_recompute_over_consecutive_ingests(
         spark.sql(f"DROP TABLE IF EXISTS mh_t_carry_ref{k}")
     assert cooled_seen
     spark.sql("DROP TABLE IF EXISTS mh_t_carry")
+
+
+def _cold_verdict(spark, idx):
+    """The staleness verdict recomputed from the components (carried file
+    removed first)."""
+    import os
+
+    import sabd_deduplicator_spark.operators.minhash_index as mhi
+
+    carry_file = os.path.join(idx.index_dir, mhi._CARRY_FILE)
+    if os.path.exists(carry_file):
+        os.remove(carry_file)
+    return mhi.index_staleness_from_stats(spark, idx)
+
+
+def test_cold_verdict_after_forget_subtracts_forgotten_docs(spark, tmp_path):
+    """The cold verdict's stored df comes from the live shingle relation, so
+    a forget lowers it exactly: the one shared (non-hot) shingle sits in 5
+    of 10 docs, 2 of those are forgotten, and df 3 of 8 live docs is not
+    over the bar. A df count that still included the forgotten docs (5 of
+    8) would report it newly hot."""
+    from sabd_deduplicator_spark.operators.minhash_index import (
+        forget_from_minhash_index,
+    )
+
+    rows = [
+        (f"zebra quantum alpha{i} beta{i} gamma{i}" if i < 5
+         else f"epsilon{i} zeta{i} eta{i} theta{i}")
+        for i in range(10)
+    ]
+    idx = build_minhash_index(
+        spark, _docs(spark, rows), str(tmp_path / "i"), "mh_t_fgt_df", 8
+    )
+    assert idx.hot(spark).count() == 0  # df 5: 10 > 10 is false, not hot
+    assert _cold_verdict(spark, idx)["n_newly_hot"] == 0
+    forget_from_minhash_index(
+        spark, idx, spark.createDataFrame([(0,), (1,)], "doc_id long")
+    )
+    got = _cold_verdict(spark, idx)
+    assert got["n_docs"] == 8
+    assert got["n_newly_hot"] == 0
+    assert got["rebuild_recommended"] is False
+    spark.sql("DROP TABLE IF EXISTS mh_t_fgt_df")
+
+
+def _df_stats_entries(index_dir):
+    import os
+
+    return [
+        os.path.join(root, name)
+        for root, dirs, files in os.walk(index_dir)
+        for name in dirs + files
+        if "df_stats" in name
+    ]
+
+
+def test_index_lifecycle_writes_no_df_stats(spark, tmp_path):
+    """Build, append, compaction and rebuild keep each stored shingle once,
+    in shingles/: no per-shingle df table appears at any step."""
+    from sabd_deduplicator_spark.operators.minhash_index import (
+        compact_minhash_index,
+        rebuild_minhash_index,
+    )
+
+    a = _docs(spark, _CORPUS)
+    b = _docs(spark, _DELTA, 100)
+    idx = build_minhash_index(spark, a, str(tmp_path / "i"), "mh_t_nodf", 8)
+    assert _df_stats_entries(idx.index_dir) == []
+    append_to_minhash_index(spark, idx, b)
+    assert _df_stats_entries(idx.index_dir) == []
+    compact_minhash_index(spark, idx)
+    assert _df_stats_entries(idx.index_dir) == []
+    rebuild_minhash_index(spark, idx, a.unionByName(b))
+    assert _df_stats_entries(idx.index_dir) == []
+    spark.sql("DROP TABLE IF EXISTS mh_t_nodf")
+
+
+def _plant_legacy_df_stats(spark, idx):
+    """A df_stats/ table and a crashed rewrite's orphan, as an index built
+    by an older version left them. Their df (10 per stored shingle) would
+    make every stored shingle newly hot if anything read them."""
+    import os
+
+    legacy = (
+        idx.shingles(spark)
+        .select("sh")
+        .distinct()
+        .select("sh", F.lit(10).cast("long").alias("df"))
+    )
+    legacy.write.parquet(os.path.join(idx.index_dir, "df_stats"))
+    legacy.write.parquet(os.path.join(idx.index_dir, ".df_stats_rw_0123abcd"))
+    assert len(_df_stats_entries(idx.index_dir)) >= 2
+
+
+def test_legacy_df_stats_is_ignored_then_removed(spark, tmp_path):
+    """A legacy df_stats/ table does not change the verdict, and compaction
+    and rebuild each delete it with any orphaned copy."""
+    from sabd_deduplicator_spark.operators.minhash_index import (
+        compact_minhash_index,
+        rebuild_minhash_index,
+    )
+
+    a = _docs(spark, _CORPUS)
+    b = _docs(spark, _DELTA, 100)
+    idx = build_minhash_index(spark, a, str(tmp_path / "i"), "mh_t_legacy", 8)
+    append_to_minhash_index(spark, idx, b)
+    without = _cold_verdict(spark, idx)
+    _plant_legacy_df_stats(spark, idx)
+    assert _cold_verdict(spark, idx) == without
+    compact_minhash_index(spark, idx)
+    assert _df_stats_entries(idx.index_dir) == []
+    assert _cold_verdict(spark, idx) == without
+    _plant_legacy_df_stats(spark, idx)
+    rebuild_minhash_index(spark, idx, a.unionByName(b))
+    assert _df_stats_entries(idx.index_dir) == []
+    spark.sql("DROP TABLE IF EXISTS mh_t_legacy")

@@ -21,6 +21,11 @@ delta, and measures per factor:
 - Spark JOBS per probe and per append (counted through a job group): at
   these sizes the per-job fixed cost dominates, so a flat job count is
   the per-batch cost staying delta-sized;
+- on-disk INDEX MB after the build and after the append (data files,
+  Spark's ``_SUCCESS`` markers and ``.crc`` checksums excluded), and the
+  VOCABULARY SHARE after the build: distinct stored shingles over stored
+  shingle rows — the size a per-shingle table would add relative to
+  ``shingles/``;
 - the RECOMPUTE-variant wall (minhash_incremental_delta's shape: sketch
   the stored stratum from scratch every run) — the cost the index
   amortizes away, expected to grow linearly while the probe does not.
@@ -46,6 +51,16 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from tools.scale_curve import build_corpus, shuffle_write_bytes  # noqa: E402
+
+
+def index_mb(index_dir: str) -> float:
+    """On-disk MB of an index directory's data files."""
+    return sum(
+        os.path.getsize(os.path.join(r, f))
+        for r, _, fs in os.walk(index_dir)
+        for f in fs
+        if not f.startswith((".", "_"))
+    ) / 1e6
 
 
 def main() -> None:
@@ -112,6 +127,11 @@ def main() -> None:
         t0 = time.time()
         idx = build_minhash_index(spark, corpus, idx_dir, f"mh_growth_x{f}")
         build_s = time.time() - t0
+        build_mb = index_mb(idx_dir)
+        vocab = idx.shingles(spark).agg(
+            F.countDistinct("sh").alias("d"), F.count("*").alias("n")
+        ).first()
+        vocab_share = vocab["d"] / max(1, vocab["n"])
 
         # probe: fixed delta against the stored index (default crowded-
         # bucket cap; skips are REPORTED via the stats dict — no silent
@@ -141,6 +161,7 @@ def main() -> None:
             append_to_minhash_index(spark, idx, delta2)
         append_s = time.time() - t0
         append_sb = shuffle_write_bytes(spark) - sb0
+        append_mb = index_mb(idx_dir)
 
         recompute_s = None
         if not args.skip_recompute:
@@ -171,26 +192,27 @@ def main() -> None:
             cand.write.format("noop").mode("overwrite").save()
             recompute_s = time.time() - t0
 
-        rows.append((f, args.base * f, build_s, probe_s, probe_jobs["jobs"],
-                     probe_sb, n_pairs, n_over, append_s, append_jobs["jobs"],
-                     append_sb, recompute_s))
+        rows.append((f, args.base * f, build_s, build_mb, vocab_share, probe_s,
+                     probe_jobs["jobs"], probe_sb, n_pairs, n_over, append_s,
+                     append_jobs["jobs"], append_sb, append_mb, recompute_s))
         rc = f"{recompute_s:.1f}" if recompute_s is not None else "-"
         print(
-            f"x{f}: build={build_s:.1f}s probe={probe_s:.1f}s "
+            f"x{f}: build={build_s:.1f}s index={build_mb:.2f}MB "
+            f"vocab_share={vocab_share:.3f} probe={probe_s:.1f}s "
             f"probe_jobs={probe_jobs['jobs']} "
             f"probe_shuffle={probe_sb/1e6:.1f}MB pairs={n_pairs} "
             f"skipped_buckets={n_over} "
             f"append={append_s:.1f}s append_jobs={append_jobs['jobs']} "
-            f"append_shuffle={append_sb/1e6:.1f}MB "
+            f"append_shuffle={append_sb/1e6:.1f}MB index={append_mb:.2f}MB "
             f"recompute_candidates={rc}s"
         )
         spark.sql(f"DROP TABLE IF EXISTS mh_growth_x{f}")
 
-    print("\n| factor | corpus_docs | build_s | probe_s | probe_jobs | probe_shuffle_MB | pairs | skipped_buckets | append_s | append_jobs | append_shuffle_MB | recompute_cand_s |")
-    print("|---|---|---|---|---|---|---|---|---|---|---|---|")
-    for f, n, b, p, pj, sb, np_, nov, ap, aj, asb, rc in rows:
+    print("\n| factor | corpus_docs | build_s | build_index_MB | vocab_share | probe_s | probe_jobs | probe_shuffle_MB | pairs | skipped_buckets | append_s | append_jobs | append_shuffle_MB | append_index_MB | recompute_cand_s |")
+    print("|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|")
+    for f, n, b, bmb, vs, p, pj, sb, np_, nov, ap, aj, asb, amb, rc in rows:
         rcs = f"{rc:.1f}" if rc is not None else "-"
-        print(f"| {f}x | {n} | {b:.1f} | {p:.1f} | {pj} | {sb/1e6:.1f} | {np_} | {nov} | {ap:.1f} | {aj} | {asb/1e6:.1f} | {rcs} |")
+        print(f"| {f}x | {n} | {b:.1f} | {bmb:.2f} | {vs:.3f} | {p:.1f} | {pj} | {sb/1e6:.1f} | {np_} | {nov} | {ap:.1f} | {aj} | {asb/1e6:.1f} | {amb:.2f} | {rcs} |")
 
 
 if __name__ == "__main__":
