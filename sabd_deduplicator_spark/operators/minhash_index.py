@@ -48,8 +48,9 @@ recompute, with a rebuild verdict that fires on df > n/2 threshold
 crossings, the only event that invalidates stored band keys.
 
 At 100 TB: the band table is the only corpus-sized artifact touched per
-probe, and it is never shuffled or rewritten per ingest — appends add
-bucket files, probes read buckets matched to the delta's band keys (band
+probe, and it is never shuffled or rewritten per ingest — each append adds
+at most one file per bucket per writer task, probes read buckets matched
+to the delta's band keys (band
 keys whose occupancy exceeds PROBE_BUCKET_CAP are skipped AND reported,
 so the collision feed is bounded even when the frozen cap has gone
 stale). Bucket-file accretion is the small-files problem every
@@ -66,6 +67,15 @@ physically, and swaps via the same marker + idempotent-publish protocol
 the append uses. The full lifecycle — build → probe/ingest → append →
 forget → compact → monitor → rebuild — is closed, each transition
 fault-injection tested.
+
+Bucket count: the build sizes it to its band rows, one bucket per
+``_STAGED_ROWS_PER_TASK`` rows (the rows one writer task handles), at
+least one; an explicit ``n_buckets`` overrides it. From then on the count
+is the live table's: append, compaction and rebuild read it from the
+catalog entry (the same one-row DESCRIBE that resolves the table's
+location, no Spark job), never from the handle, so a handle carrying
+another count cannot write bucket ids the table's scan does not read, and
+no maintenance pass changes the layout.
 
 Round-11 production posture:
 
@@ -137,7 +147,9 @@ BAND_KEY = ["band", "x", "y"]
 @dataclass(frozen=True)
 class MinHashIndex:
     """Handle to one on-disk index: the catalog name of the bucketed band
-    table plus the directory holding its parquet components."""
+    table plus the directory holding its parquet components. ``n_buckets``
+    is the count the build chose; writers never read it (they take the
+    live table's, see the module docstring)."""
 
     table_name: str
     index_dir: str
@@ -412,7 +424,7 @@ def build_minhash_index(
     docs: DataFrame,
     index_dir: str,
     table_name: str,
-    n_buckets: int = N_INDEX_BUCKETS,
+    n_buckets: int | None = None,
     hot: DataFrame | None = None,
     bands_path: str | None = None,
 ) -> MinHashIndex:
@@ -430,7 +442,10 @@ def build_minhash_index(
       denominators);
     - the band table, saved as EXTERNAL catalog table ``table_name`` at
       ``index_dir/bands``, bucketed AND sorted by (band, x, y): probes
-      read it shuffle-free.
+      read it shuffle-free. ``n_buckets`` defaults to one bucket per
+      ``_STAGED_ROWS_PER_TASK`` band rows (sized docs × bands, observed
+      while writing ``sizes/``), at least one; the rows are repartitioned
+      onto the bucket hash first, so the write lands one file per bucket.
 
     Two passes over the corpus scan (hot aggregate, then capped sketch) —
     the honest cost of a build job; probes and appends never re-pay it.
@@ -447,15 +462,14 @@ def build_minhash_index(
     files, so the staged bands must already sit at their final location).
     """
     from sabd_deduplicator_spark.operators.similarity import (
+        BAND_ROWS,
+        MINHASH_PERMS,
         minhash_bands,
         shingles_of,
     )
-    from sabd_deduplicator_spark.sources.writers import (
-        overwrite_parquet,
-        save_bucketed_table,
-    )
+    from sabd_deduplicator_spark.sources.writers import overwrite_parquet
 
-    idx = MinHashIndex(table_name, index_dir, n_buckets)
+    idx = MinHashIndex(table_name, index_dir)
     sh0 = shingles_of(docs)
     if hot is None:
         n_docs = docs.count()
@@ -472,20 +486,46 @@ def build_minhash_index(
     capped = sh0.join(broadcast(idx.hot(spark).select("sh")), "sh", "left_anti")
     overwrite_parquet(capped.select("doc_id", "sh"), idx.shingles_path)
     stored = idx.shingles(spark)
+    sized = Observation()
     overwrite_parquet(
-        stored.groupBy("doc_id").agg(F.count("*").alias("n")), idx.sizes_path
+        stored.groupBy("doc_id")
+        .agg(F.count("*").alias("n"))
+        .observe(sized, F.count(F.lit(1)).alias("docs")),
+        idx.sizes_path,
     )
-    save_bucketed_table(
+    if n_buckets is None:
+        n_buckets = _write_tasks(
+            sized.get["docs"] * (MINHASH_PERMS // BAND_ROWS)
+        )
+    _save_bands(
         minhash_bands(stored),
         table_name,
-        BAND_KEY,
-        n_buckets=n_buckets,
-        path=bands_path or os.path.join(index_dir, "bands"),
+        n_buckets,
+        bands_path or os.path.join(index_dir, "bands"),
     )
     # carry the verdict inputs now, through the same derivation a cold
     # verdict uses, so the first ingest starts carried
     _carried_verdict(spark, idx)
-    return idx
+    return MinHashIndex(table_name, index_dir, n_buckets)
+
+
+def _save_bands(
+    bands: DataFrame, table_name: str, n_buckets: int, path: str
+) -> None:
+    """Write a whole band table (build, compaction) at one file per
+    bucket. A bucketed write emits one file per (task × bucket it sees), so
+    the rows are repartitioned onto the bucket hash first:
+    repartition(n, cols) and bucket assignment use the same
+    pmod(murmur3(key), n), so task p holds exactly bucket p."""
+    from sabd_deduplicator_spark.sources.writers import save_bucketed_table
+
+    save_bucketed_table(
+        bands.repartition(n_buckets, *BAND_KEY),
+        table_name,
+        BAND_KEY,
+        n_buckets=n_buckets,
+        path=path,
+    )
 
 
 @dataclass(frozen=True)
@@ -883,14 +923,16 @@ _REBUILD_MARKER = "_commit_rebuild_"  # existence == the rebuild is committed
 _RETIRED = ".retired_"              # old component parked mid-swap (hidden)
 
 
-def _table_location(spark: SparkSession, table_name: str) -> str:
-    """Resolve a band table's CURRENT data directory from the catalog —
-    after a compaction or rebuild the live table's is no longer the
-    build-time bands/ directory. The JSON form of the command is one row,
-    so reading it runs no Spark job (a DataFrame filter over the
-    row-per-field form does)."""
+def _table_layout(spark: SparkSession, table_name: str) -> tuple[str, int]:
+    """A band table's CURRENT data directory and bucket count, from the
+    catalog — after a compaction or rebuild the live table's directory is
+    no longer the build-time bands/ one, and the bucket count is the
+    table's, whatever count a handle carries. The JSON form of the command
+    is one row, so reading it runs no Spark job (a DataFrame filter over
+    the row-per-field form does)."""
     desc = spark.sql(f"DESCRIBE TABLE EXTENDED {table_name} AS JSON").first()
-    return json.loads(desc[0])["location"].removeprefix("file:")
+    desc = json.loads(desc[0])
+    return desc["location"].removeprefix("file:"), int(desc["num_buckets"])
 
 
 def _swap_band_table(
@@ -906,12 +948,13 @@ def _swap_band_table(
     missing table between a DROP and a RENAME. The staged table is then
     dropped (external: its files, now the live location, survive); a
     re-entry after a crash in between repeats the idempotent SET LOCATION
-    and finishes the drop. The old location's files are the caller's to
-    delete, after this returns."""
+    and finishes the drop. SET LOCATION changes nothing else, so the live
+    table keeps its bucket spec; callers stage at that spec. The old
+    location's files are the caller's to delete, after this returns."""
     if spark.catalog.tableExists(idx.table_name):
         spark.sql(
             f"ALTER TABLE {idx.table_name} SET LOCATION "
-            f"'{_table_location(spark, staged_tbl)}'"
+            f"'{_table_layout(spark, staged_tbl)[0]}'"
         )
         if _crash == "post_set_location":
             raise InjectedCrash("post_set_location")
@@ -964,7 +1007,7 @@ def _publish_append(
     location). Safe to re-run from any interruption point."""
     for comp in (*_SEGMENT_COMPONENTS, "bands"):
         live = (
-            _table_location(spark, idx.table_name)
+            _table_layout(spark, idx.table_name)[0]
             if comp == "bands"
             else os.path.join(idx.index_dir, comp)
         )
@@ -1035,7 +1078,7 @@ def _publish_rebuild(
         _swap_band_table(spark, idx, staging_tbl, _crash)
     old_loc = manifest.get("old_band_location")
     if old_loc and os.path.isdir(old_loc):
-        new_loc = _table_location(spark, idx.table_name)
+        new_loc = _table_layout(spark, idx.table_name)[0]
         if os.path.realpath(old_loc) != os.path.realpath(new_loc):
             shutil.rmtree(old_loc, ignore_errors=True)  # ... deleted HERE
     for f in manifest.get("tomb_files", []):
@@ -1179,8 +1222,9 @@ def append_to_minhash_index(
     """Fold a new batch into the stored index — the near-dup twin of
     merge_hash_links_onto_index: the (huge) index stays in place, only the
     (small) delta moves. Bands are appended INTO the table's bucket layout
-    (each append adds one file set per bucket; bucketed-join co-location is
-    preserved — plan-gated post-append in tests/test_minhash_index.py),
+    at the live table's bucket count, never the handle's (each append adds
+    at most one file per bucket per writer task; bucketed-join co-location
+    is preserved — plan-gated post-append in tests/test_minhash_index.py),
     shingles, sizes and the stats components land as ordinary parquet
     files in their directories.
 
@@ -1389,10 +1433,11 @@ def _stage_bands(
     staging: str,
     batch: str,
 ) -> None:
-    """Write 2 of 2: the bands through the SAME bucketed writer the table
-    was built with (a staging catalog table, dropped right away — external,
-    the files survive), so the staged files carry the bucket suffixes the
-    live table's bucketed scan reads."""
+    """Write 2 of 2: the bands through the SAME bucketed writer, at the
+    live table's bucket count (a staging catalog table, dropped right away
+    — external, the files survive), so the staged files carry the bucket
+    suffixes the live table's bucketed scan reads: at most one file per
+    bucket per writer task."""
     from sabd_deduplicator_spark.sources.writers import save_bucketed_table
 
     staging_tbl = f"{idx.table_name}__append_{batch}"
@@ -1402,7 +1447,7 @@ def _stage_bands(
         .coalesce(n_tasks),
         staging_tbl,
         BAND_KEY,
-        n_buckets=idx.n_buckets,
+        n_buckets=_table_layout(spark, idx.table_name)[1],
         path=os.path.join(staging, "bands"),
     )
     spark.sql(f"DROP TABLE {staging_tbl}")
@@ -1992,12 +2037,13 @@ def minhash_index_stats_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 def compact_minhash_index(spark: SparkSession, idx: MinHashIndex) -> dict:
     """Bucket-PRESERVING compaction of an appended index — the maintenance
     pass the append path makes necessary: every append_to_minhash_index
-    adds one file set per bucket, and at 100 TB millions of small bucket
+    adds up to one file per bucket, and at 100 TB millions of small bucket
     files dominate scan planning. Plain compact_parquet would repartition
     by size and DESTROY the bucket layout (bucketing lives in the catalog
     metadata plus per-file bucket suffixes, not the data), so the band
     table is rewritten THROUGH THE SAME bucketed writer — one shuffle of
-    the index into exactly n_buckets files — staged as a sibling table,
+    the index into one file per bucket, at the live table's bucket count
+    (read from the catalog, not the handle) — staged as a sibling table,
     row-verified BEFORE the swap, then swapped like the rebuild's band
     table (:func:`_swap_band_table`): ONE catalog mutation repoints the
     live table at the staged files, then the staged table is dropped, so
@@ -2020,14 +2066,11 @@ def _compact_under_lease(
     import shutil
     import uuid
 
-    from sabd_deduplicator_spark.sources.writers import (
-        compact_parquet,
-        save_bucketed_table,
-    )
+    from sabd_deduplicator_spark.sources.writers import compact_parquet
 
     def _band_files() -> list[str]:
         return glob.glob(
-            os.path.join(_table_location(spark, idx.table_name), "*.parquet")
+            os.path.join(_table_layout(spark, idx.table_name)[0], "*.parquet")
         )
 
     # complete any committed append and discard any orphaned staging before
@@ -2035,7 +2078,7 @@ def _compact_under_lease(
     # staging, so roll_back is safe here) — otherwise staged band files
     # could publish into the OLD location after the swap below retires it
     recover_minhash_index(spark, idx, roll_back=True, _owns_lease=True)
-    live_location = _table_location(spark, idx.table_name)
+    live_location, n_buckets = _table_layout(spark, idx.table_name)
     before = _band_files()
     live_rows = idx.bands(spark).count()
     staging_name = idx.table_name + "__compact"
@@ -2043,15 +2086,11 @@ def _compact_under_lease(
         idx.index_dir, f"bands_compact_{uuid.uuid4().hex[:8]}"
     )
     spark.sql(f"DROP TABLE IF EXISTS {staging_name}")
-    # a bucketed write emits one file per (task × bucket it sees) — the
-    # consolidation comes from repartitioning onto the bucket hash first:
-    # repartition(n, cols) and bucket assignment use the same
-    # pmod(murmur3(key), n), so task p holds exactly bucket p and the
-    # rewrite lands at one file per bucket. The rewrite reads the RAW
-    # parquet files, not spark.table(): a bucketed-table scan already
-    # satisfies the hash distribution, so Catalyst would elide the
-    # repartition and pass every small single-bucket file through 1:1 —
-    # exactly the non-compaction observed when this was first written.
+    # the rewrite (_save_bands: one file per bucket) reads the RAW parquet
+    # files, not spark.table(): a bucketed-table scan already satisfies the
+    # hash distribution, so Catalyst would elide the repartition and pass
+    # every small single-bucket file through 1:1 — exactly the
+    # non-compaction observed when this was first written.
     raw = spark.read.parquet(live_location)  # parquet is self-describing
     # deletion vectors are APPLIED here (the Delta DV + OPTIMIZE split):
     # tombstoned rows physically leave every component during the rewrite,
@@ -2073,13 +2112,7 @@ def _compact_under_lease(
         tomb = broadcast(spark.read.schema("doc_id long").parquet(*tomb_files))
         raw = raw.join(tomb, "doc_id", "left_anti")
         live_rows = raw.count()
-    save_bucketed_table(
-        raw.repartition(idx.n_buckets, *BAND_KEY),
-        staging_name,
-        BAND_KEY,
-        n_buckets=idx.n_buckets,
-        path=staging_path,
-    )
+    _save_bands(raw, staging_name, n_buckets, staging_path)
     staged_rows = spark.table(staging_name).count()
     if staged_rows != live_rows:
         spark.sql(f"DROP TABLE {staging_name}")
@@ -2157,7 +2190,8 @@ def rebuild_minhash_index(
        of the new index until the next compaction/rebuild.
     2. STAGE a complete fresh build: hot/shingles/sizes under the hidden
        ``.rebuild_<batch>/`` root (invisible to every reader), the band
-       table as catalog table ``<name>__rebuild_<batch>`` whose files land
+       table — at the live table's bucket count, so the swap keeps the
+       layout — as catalog table ``<name>__rebuild_<batch>`` whose files land
        at ``bands_rebuild_<batch>/`` (their FINAL location — the catalog
        swap moves no files). Verified before the commit point:
        band rows == sized docs × bands-per-doc, else abort with the live
@@ -2224,13 +2258,13 @@ def _rebuild_under_lease(
     staging = os.path.join(idx.index_dir, _REBUILD_STAGING + batch)
     staging_tbl = f"{idx.table_name}__rebuild_{batch}"
     bands_path = os.path.join(idx.index_dir, f"bands_rebuild_{batch}")
-    old_band_location = _table_location(spark, idx.table_name)
+    old_band_location, n_buckets = _table_layout(spark, idx.table_name)
     staged = build_minhash_index(
         spark,
         docs,
         staging,
         staging_tbl,
-        n_buckets=idx.n_buckets,
+        n_buckets=n_buckets,
         bands_path=bands_path,
     )
     n_docs_indexed = staged.sizes(spark).count()

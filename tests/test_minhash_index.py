@@ -1094,3 +1094,126 @@ def test_legacy_df_stats_is_ignored_then_removed(spark, tmp_path):
     rebuild_minhash_index(spark, idx, a.unionByName(b))
     assert _df_stats_entries(idx.index_dir) == []
     spark.sql("DROP TABLE IF EXISTS mh_t_legacy")
+
+
+def _bucket_files(spark, name):
+    """The live band table's bucket count and its data files per bucket id
+    (the id is the ``_<bucket>`` suffix the bucketed writer gives each
+    file)."""
+    import glob
+    import os
+    import re
+    from collections import Counter
+
+    from sabd_deduplicator_spark.operators.minhash_index import _table_layout
+
+    location, n_buckets = _table_layout(spark, name)
+    ids = Counter(
+        int(re.search(r"_(\d{5})\.c\d{3}", os.path.basename(f)).group(1))
+        for f in glob.glob(os.path.join(location, "*.parquet"))
+    )
+    return n_buckets, ids
+
+
+def test_append_through_handle_with_other_bucket_count_keeps_pairs(
+    spark, tmp_path
+):
+    """An append through a handle that carries another bucket count (here
+    the handle default, 32, on an 8-bucket table) stages at the live
+    table's count: every band row stays readable, so a probe of exact
+    copies finds all of them."""
+    from sabd_deduplicator_spark.operators.minhash_index import MinHashIndex
+
+    name = "mh_t_hcount"
+    built = build_minhash_index(
+        spark, _docs(spark, _CORPUS), str(tmp_path / "i"), name, n_buckets=8
+    )
+    texts = [" ".join(f"w{i}x{j}" for j in range(10)) for i in range(60)]
+    handle = MinHashIndex(name, built.index_dir)
+    assert handle.n_buckets != 8
+    append_to_minhash_index(spark, handle, _docs(spark, texts, 1000))
+
+    n_buckets, ids = _bucket_files(spark, name)
+    assert n_buckets == 8 and max(ids) < 8
+    pairs = {
+        (r.delta_doc, r.corpus_doc)
+        for r in probe_minhash_index(spark, handle, _docs(spark, texts, 5000))
+        .filter(F.col("jaccard") == 1.0)
+        .collect()
+    }
+    assert pairs == {(5000 + i, 1000 + i) for i in range(60)}
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_default_build_of_small_corpus_is_one_bucket(no_broadcast, tmp_path):
+    """A corpus far under one writer task's band rows builds one bucket;
+    build, append and compaction each leave one band file per bucket, and
+    the probe fragment's index side still reads with no exchange."""
+    from sabd_deduplicator_spark.operators.minhash_index import (
+        compact_minhash_index,
+    )
+
+    spark = no_broadcast
+    name = "mh_t_one"
+    idx = build_minhash_index(
+        spark, _docs(spark, _CORPUS), str(tmp_path / "i"), name
+    )
+    assert idx.n_buckets == 1
+    assert _bucket_files(spark, name) == (1, {0: 1})
+
+    bands_d = _sketch_delta(spark, idx, _docs(spark, _DELTA, 100)).bands
+    p = str(tmp_path / "delta_bands")
+    bands_d.write.parquet(p)
+    frag = _probe_fragment(spark, idx, p)
+    assert count_exchanges(frag) == 1
+    assert frag.count() > 0
+
+    append_to_minhash_index(spark, idx, _docs(spark, _DELTA, 200))
+    assert _bucket_files(spark, name) == (1, {0: 2})
+    assert compact_minhash_index(spark, idx)["files_after"] == 1
+    assert _bucket_files(spark, name) == (1, {0: 1})
+    assert count_exchanges(_probe_fragment(spark, idx, p)) == 1
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_default_bucket_count_follows_band_rows(spark, tmp_path, monkeypatch):
+    """The default count is one bucket per writer task's band rows (sized
+    docs × bands, rounded up); an explicit count wins. Append, compaction
+    and rebuild keep the live count whatever the handle carries, each
+    leaving at most one band file per bucket."""
+    import sabd_deduplicator_spark.operators.minhash_index as mhi
+    from sabd_deduplicator_spark.operators.minhash_index import (
+        MinHashIndex,
+        compact_minhash_index,
+        rebuild_minhash_index,
+    )
+    from sabd_deduplicator_spark.operators.similarity import (
+        BAND_ROWS,
+        MINHASH_PERMS,
+    )
+
+    # 10 sized docs × 4 bands = 40 band rows → 3 buckets of ≤ 16 rows
+    monkeypatch.setattr(mhi, "_STAGED_ROWS_PER_TASK", 16)
+    assert len(_CORPUS) * (MINHASH_PERMS // BAND_ROWS) == 40
+    a = _docs(spark, _CORPUS)
+    name = "mh_t_derived"
+    idx = build_minhash_index(spark, a, str(tmp_path / "i"), name)
+    assert idx.n_buckets == 3
+    assert _bucket_files(spark, name) == (3, {0: 1, 1: 1, 2: 1})
+    explicit = build_minhash_index(spark, a, str(tmp_path / "e"), name + "_e", 5)
+    assert explicit.n_buckets == 5 and _bucket_files(spark, name + "_e")[0] == 5
+
+    # from here on a derived count would be 1: every writer must keep 3
+    monkeypatch.setattr(mhi, "_STAGED_ROWS_PER_TASK", 1_000)
+    handle = MinHashIndex(name, idx.index_dir)
+    b = _docs(spark, _DELTA, 100)
+    append_to_minhash_index(spark, handle, b)
+    n_buckets, ids = _bucket_files(spark, name)
+    assert n_buckets == 3 and max(ids) < 3
+    assert max(ids.values()) == 2  # the append added ≤ 1 file per bucket
+    compact_minhash_index(spark, handle)
+    assert _bucket_files(spark, name) == (3, {0: 1, 1: 1, 2: 1})
+    rebuild_minhash_index(spark, handle, a.unionByName(b))
+    assert _bucket_files(spark, name) == (3, {0: 1, 1: 1, 2: 1})
+    for t in (name, name + "_e"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -21,6 +21,11 @@ delta, and measures per factor:
 - Spark JOBS per probe and per append (counted through a job group): at
   these sizes the per-job fixed cost dominates, so a flat job count is
   the per-batch cost staying delta-sized;
+- the band table's BUCKET count and its BAND FILES (data files at the
+  live table's location) after the build and after the append: the
+  build sizes the bucket count to its band rows, so at these sizes the
+  index scan is one task per bucket and each append adds at most one
+  file per bucket per writer task;
 - on-disk INDEX MB after the build and after the append (data files,
   Spark's ``_SUCCESS`` markers and ``.crc`` checksums excluded), and the
   VOCABULARY SHARE after the build: distinct stored shingles over stored
@@ -61,6 +66,16 @@ def index_mb(index_dir: str) -> float:
         for f in fs
         if not f.startswith((".", "_"))
     ) / 1e6
+
+
+def band_layout(spark, table_name: str) -> tuple[int, int]:
+    """(bucket count, data files) of a band table, from its catalog entry."""
+    import glob
+
+    from sabd_deduplicator_spark.operators.minhash_index import _table_layout
+
+    location, n_buckets = _table_layout(spark, table_name)
+    return n_buckets, len(glob.glob(os.path.join(location, "*.parquet")))
 
 
 def main() -> None:
@@ -128,6 +143,7 @@ def main() -> None:
         idx = build_minhash_index(spark, corpus, idx_dir, f"mh_growth_x{f}")
         build_s = time.time() - t0
         build_mb = index_mb(idx_dir)
+        buckets, build_files = band_layout(spark, idx.table_name)
         vocab = idx.shingles(spark).agg(
             F.countDistinct("sh").alias("d"), F.count("*").alias("n")
         ).first()
@@ -162,6 +178,7 @@ def main() -> None:
         append_s = time.time() - t0
         append_sb = shuffle_write_bytes(spark) - sb0
         append_mb = index_mb(idx_dir)
+        append_buckets, append_files = band_layout(spark, idx.table_name)
 
         recompute_s = None
         if not args.skip_recompute:
@@ -192,27 +209,31 @@ def main() -> None:
             cand.write.format("noop").mode("overwrite").save()
             recompute_s = time.time() - t0
 
-        rows.append((f, args.base * f, build_s, build_mb, vocab_share, probe_s,
-                     probe_jobs["jobs"], probe_sb, n_pairs, n_over, append_s,
-                     append_jobs["jobs"], append_sb, append_mb, recompute_s))
+        rows.append((f, args.base * f, build_s, build_mb, buckets, build_files,
+                     vocab_share, probe_s, probe_jobs["jobs"], probe_sb, n_pairs,
+                     n_over, append_s, append_jobs["jobs"], append_sb, append_mb,
+                     append_buckets, append_files, recompute_s))
         rc = f"{recompute_s:.1f}" if recompute_s is not None else "-"
         print(
             f"x{f}: build={build_s:.1f}s index={build_mb:.2f}MB "
+            f"buckets={buckets} band_files={build_files} "
             f"vocab_share={vocab_share:.3f} probe={probe_s:.1f}s "
             f"probe_jobs={probe_jobs['jobs']} "
             f"probe_shuffle={probe_sb/1e6:.1f}MB pairs={n_pairs} "
             f"skipped_buckets={n_over} "
             f"append={append_s:.1f}s append_jobs={append_jobs['jobs']} "
             f"append_shuffle={append_sb/1e6:.1f}MB index={append_mb:.2f}MB "
+            f"buckets={append_buckets} band_files={append_files} "
             f"recompute_candidates={rc}s"
         )
         spark.sql(f"DROP TABLE IF EXISTS mh_growth_x{f}")
 
-    print("\n| factor | corpus_docs | build_s | build_index_MB | vocab_share | probe_s | probe_jobs | probe_shuffle_MB | pairs | skipped_buckets | append_s | append_jobs | append_shuffle_MB | append_index_MB | recompute_cand_s |")
-    print("|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|")
-    for f, n, b, bmb, vs, p, pj, sb, np_, nov, ap, aj, asb, amb, rc in rows:
+    print("\n| factor | corpus_docs | build_s | build_index_MB | build_buckets | build_band_files | vocab_share | probe_s | probe_jobs | probe_shuffle_MB | pairs | skipped_buckets | append_s | append_jobs | append_shuffle_MB | append_index_MB | append_buckets | append_band_files | recompute_cand_s |")
+    print("|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|")
+    for (f, n, b, bmb, bk, bf, vs, p, pj, sb, np_, nov, ap, aj, asb, amb,
+         abk, abf, rc) in rows:
         rcs = f"{rc:.1f}" if rc is not None else "-"
-        print(f"| {f}x | {n} | {b:.1f} | {bmb:.2f} | {vs:.3f} | {p:.1f} | {pj} | {sb/1e6:.1f} | {np_} | {nov} | {ap:.1f} | {aj} | {asb/1e6:.1f} | {amb:.2f} | {rcs} |")
+        print(f"| {f}x | {n} | {b:.1f} | {bmb:.2f} | {bk} | {bf} | {vs:.3f} | {p:.1f} | {pj} | {sb/1e6:.1f} | {np_} | {nov} | {ap:.1f} | {aj} | {asb/1e6:.1f} | {amb:.2f} | {abk} | {abf} | {rcs} |")
 
 
 if __name__ == "__main__":
